@@ -4,13 +4,14 @@ import graft.{QDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Superstep.{cut, Fixpoint, Rounds, UpTo}
 
 /** Graph operator inventory (SURVEY.md §2.10) over the TPC-H-derived
   * property graph: neighbors/degree, BFS, shortest paths (unweighted and
   * weighted), variable-length paths, connected components, triangles,
   * PageRank, node similarity, and motif/pattern matching.
   *
-  * Every algorithm is a fixed-iteration lazy DataFrame plan
+  * Every iterative algorithm runs a fixed number of [[Superstep]] rounds
   * (`graft.graph.Algorithms`), so the DuckDB oracle can unroll the same
   * number of steps and hash-match exactly.
   */
@@ -95,7 +96,8 @@ object GraphQueries {
       // one level above their LCA (the region), so climbRounds=1; the
       // cycle↔tree-edge auxiliary graph of a 5-clique-plus-root has
       // eccentricity ≤ 4 from any min-label seat, so ccIters=4.
-      Algorithms.biconnectedComponents(und, roots, 1, 4, climbRounds = 1)
+      Algorithms.biconnectedComponents(und, Some(roots),
+        forest = Rounds(1), climb = Rounds(1), cc = Rounds(4))
     })
 
   /** g46 engine (parameterized for the `GRAPH CORES` statement): nested-
@@ -119,33 +121,28 @@ object GraphQueries {
     // never cascade.
     // materialize the starting edge frame once — every peel round re-read
     // it (plus its union/concat lineage) twice via the semi-joins (r13 §2.4)
-    var e = Algorithms.cut(und.select("src", "dst"))
-    var alive = nodes.select("key")
-    var aliveN = -1L // size of `alive`; -1 = not yet counted
-    val levels = Seq.newBuilder[DataFrame]
-    for (k <- 1 to maxK; if aliveN != 0) {
-      def peelOnce(): Long = {
-        val deg = e.join(alive.select(col("key").as("src")), Seq("src"), "left_semi")
-          .join(alive.select(col("key").as("dst")), Seq("dst"), "left_semi")
-          .groupBy("src").agg(count(lit(1)).as("deg"))
-        alive = Algorithms.cut(deg.filter(col("deg") >= k).select(col("src").as("key")))
-        alive.count()
-      }
-      var n = peelOnce()
-      if (k > 1) {
-        // Cascade: removals can push survivors below k; repeat until stable.
-        var prev = if (aliveN >= 0) aliveN else Long.MaxValue
-        while (n > 0 && n < prev) { prev = n; n = peelOnce() }
-      }
-      aliveN = n
-      if (n > 0) levels += alive.withColumn("core", lit(k))
-      if (k == 2 && n > 0) e = Algorithms.cut(
-        e.join(alive.select(col("key").as("src")), Seq("src"), "left_semi")
-          .join(alive.select(col("key").as("dst")), Seq("dst"), "left_semi")
-          .select("src", "dst"))
-    }
+    val e0 = cut(und.select("src", "dst"))
+    def inCore(e: DataFrame, alive: DataFrame) =
+      e.join(alive.select(col("key").as("src")), Seq("src"), "left_semi")
+        .join(alive.select(col("key").as("dst")), Seq("dst"), "left_semi")
+    // level k: state (edges, alive, |alive| or -1 before the first count,
+    // levels found); the loop ends early once no node survives
+    val (_, _, _, levels) = Superstep.run(UpTo(maxK),
+        (e0, nodes.select("key"), -1L, List.empty[DataFrame])) { case ((e, alive0, aliveN, levels), k) =>
+      // Cascade: removals can push survivors below k; peel until the
+      // alive count stops shrinking (it strictly shrinks, so this ends).
+      val start = (alive0, if (aliveN >= 0) aliveN else Long.MaxValue)
+      val (alive, n) = Superstep.run(if (k == 1) UpTo(1) else Fixpoint(Int.MaxValue), start) {
+        case ((alive, _), _) =>
+          val deg = inCore(e, alive).groupBy("src").agg(count(lit(1)).as("deg"))
+          val next = cut(deg.filter(col("deg") >= k).select(col("src").as("key")))
+          (next, next.count())
+      } { case ((_, prev), (_, n)) => n == 0 || n >= prev }
+      (if (k == 2 && n > 0) cut(inCore(e, alive).select("src", "dst")) else e,
+        alive, n, if (n > 0) alive.withColumn("core", lit(k)) :: levels else levels)
+    } { case (_, (_, _, n, _)) => n == 0 }
     val base = nodes.withColumn("core", lit(0))
-    levels.result().foldLeft(base)(_ union _)
+    levels.reverse.foldLeft(base)(_ union _)
       .groupBy("key").agg(max("core").as("core"))
       .groupBy("core").agg(count(lit(1)).as("n_nodes"))
       .orderBy("core")
@@ -297,7 +294,8 @@ object GraphQueries {
          |ORDER BY neighbor, etype""".stripMargin),
 
     "g03_bfs_depth3" -> QDef(
-      (s, d) => Algorithms.bfs(TpchGraph.undirected(TpchGraph.edges(s, d)), "region:0", 3)
+      (s, d) => Algorithms.bfs(TpchGraph.undirected(TpchGraph.edges(s, d)),
+        Algorithms.source(s, "region:0"), Rounds(3))
         .orderBy("key"),
       s"""WITH $allEdgesSql,
          |d0 AS (SELECT 'region:0' AS key, 0 AS depth),
@@ -312,7 +310,8 @@ object GraphQueries {
          |GROUP BY key ORDER BY key""".stripMargin),
 
     "g04_shortest_path_len" -> QDef(
-      (s, d) => Algorithms.bfs(TpchGraph.undirected(TpchGraph.edges(s, d)), "region:0", 3)
+      (s, d) => Algorithms.bfs(TpchGraph.undirected(TpchGraph.edges(s, d)),
+        Algorithms.source(s, "region:0"), Rounds(3))
         .filter(col("key").isin((0 to 9).map(i => s"customer:$i"): _*))
         .orderBy("key"),
       s"""WITH $allEdgesSql,
@@ -337,7 +336,7 @@ object GraphQueries {
 
     "g06_connected_components" -> QDef(
       (s, d) => Algorithms.connectedComponents(
-        TpchGraph.undirected(TpchGraph.edges(s, d)), TpchGraph.nodes(s, d), 6)
+        TpchGraph.undirected(TpchGraph.edges(s, d)), TpchGraph.nodes(s, d), Rounds(6))
         .groupBy("component").agg(count(lit(1)).as("n_nodes"))
         .orderBy("component"),
       componentCensusOracleSql),
@@ -739,7 +738,7 @@ object GraphQueries {
         val und = TpchGraph.undirected(TpchGraph.edges(s, d))
         val allowed = TpchGraph.nodes(s, d)
           .filter(col("label") =!= "supplier").select("key")
-        Algorithms.bfs(und, "region:0", 3,
+        Algorithms.bfs(und, Algorithms.source(s, "region:0"), Rounds(3),
           edgePred = Some(col("etype") =!= "same_region"),
           allowedNodes = Some(allowed))
           .orderBy("key")
@@ -766,15 +765,13 @@ object GraphQueries {
     "g14_kcore" -> QDef(
       (s, d) => {
         val und = TpchGraph.undirected(TpchGraph.edges(s, d)).select("src", "dst")
-        var alive = TpchGraph.nodes(s, d).select("key")
-        for (_ <- 1 to 3) {
+        Superstep.rounds(3, TpchGraph.nodes(s, d).select("key")) { (alive, _) =>
           val deg = und
             .join(alive.select(col("key").as("src")), Seq("src"))
             .join(alive.select(col("key").as("dst")), Seq("dst"))
             .groupBy("src").agg(count(lit(1)).as("deg"))
-          alive = Algorithms.cut(deg.filter(col("deg") >= 2).select(col("src").as("key")))
-        }
-        alive.select(substring_index(col("key"), ":", 1).as("label"))
+          cut(deg.filter(col("deg") >= 2).select(col("src").as("key")))
+        }.select(substring_index(col("key"), ":", 1).as("label"))
           .groupBy("label").agg(count(lit(1)).as("n_nodes"))
           .orderBy("label")
       },
@@ -859,7 +856,7 @@ object GraphQueries {
         val und = e.select(col("src"), col("dst"))
           .union(e.select(col("dst").as("src"), col("src").as("dst")))
         val n30 = und.select(col("src").as("key")).distinct()
-        Algorithms.closenessBounded(und, n30, 2)
+        Algorithms.closeness(und, n30, Rounds(2))
           .orderBy(desc("closeness"), col("key")).limit(30)
       },
       s"""WITH $treeEdgesSql,
@@ -917,18 +914,17 @@ object GraphQueries {
       (s, d) => {
         val n = Tables(s, d, "nation")
         // loop-invariant edge/node frames materialize once (r13 §2.4)
-        val e = Algorithms.cut(
+        val e = cut(
           n.select(col("n_nationkey").as("ka"), col("n_regionkey").as("ra"))
           .join(n.select(col("n_nationkey").as("kb"), col("n_regionkey").as("rb")),
             col("ra") === col("rb") && col("ka") < col("kb"))
           .select(concat(lit("nation:"), col("ka").cast("string")).as("src"),
             concat(lit("nation:"), col("kb").cast("string")).as("dst"),
             (col("ka") * 1000 + col("kb")).cast("long").as("w")))
-        val nodes = Algorithms.cut(
+        val nodes = cut(
           n.select(concat(lit("nation:"), col("n_nationkey").cast("string")).as("key")))
-        var comp = nodes.select(col("key"), col("key").as("cmp"))
-        var mst = e.limit(0)
-        for (_ <- 1 to 2) {
+        val start = (nodes.select(col("key"), col("key").as("cmp")), e.limit(0))
+        val (_, mst) = Superstep.rounds(2, start) { case ((comp, mst0), _) =>
           val labeled = e
             .join(comp.select(col("key").as("src"), col("cmp").as("csrc")), Seq("src"))
             .join(comp.select(col("key").as("dst"), col("cmp").as("cdst")), Seq("dst"))
@@ -941,10 +937,10 @@ object GraphQueries {
           val picked = cand.groupBy("c")
             .agg(min(struct(col("w"), col("src"), col("dst"))).as("s"))
             .select(col("s.src").as("src"), col("s.dst").as("dst"), col("s.w").as("w"))
-          mst = Algorithms.cut(mst.union(picked).distinct())
+          val mst = cut(mst0.union(picked).distinct())
           val undMst = mst.select("src", "dst").union(mst.select(col("dst").as("src"), col("src").as("dst")))
-          comp = Algorithms.connectedComponents(undMst, nodes, 4)
-            .select(col("key"), col("component").as("cmp"))
+          (Algorithms.connectedComponents(undMst, nodes, Rounds(4))
+            .select(col("key"), col("component").as("cmp")), mst)
         }
         mst.join(Tables(s, d, "nation")
             .select(concat(lit("nation:"), col("n_nationkey").cast("string")).as("src"),
@@ -1049,7 +1045,7 @@ object GraphQueries {
             .select(concat(lit("region:"), col("r_regionkey").cast("string")).as("key")))
           .union(cust.filter(col("c_custkey") % 250 === 1)
             .select(concat(lit("customer:"), col("c_custkey").cast("string")).as("key")))
-        Algorithms.betweennessBrandes(und, sources, 2)
+        Algorithms.betweennessBrandes(und, sources, Rounds(2))
           .select(col("key"), round(col("betweenness"), 6).as("betweenness"))
           .orderBy(desc("betweenness"), col("key")).limit(20)
       },
@@ -1098,60 +1094,18 @@ object GraphQueries {
     // the oracle stay deterministic.
     "g23_louvain_multilevel" -> QDef(
       (s, d) => {
-        // loop-invariant frames materialize ONCE (round 13, §2.4): the
-        // un-cut und/deg plans re-ran the symmetric-closure union and the
-        // degree aggregation inside every sweep's job.
-        val und = Algorithms.cut(
-          TpchGraph.undirected(TpchGraph.edges(s, d)).select("src", "dst"))
-        val nodes = TpchGraph.nodes(s, d).select("key")
-        val deg = Algorithms.cut(
-          und.groupBy(col("src").as("key")).agg(count(lit(1)).as("deg")))
-        val m2 = und.count().toDouble // = 2m, invariant across levels
-        var comm = nodes.select(col("key"), col("key").as("comm"))
-        for (_ <- 1 to 2) {
-          val tot = comm.join(deg, Seq("key")).groupBy("comm").agg(sum("deg").as("tot"))
-          val evc = und
-            .join(comm.select(col("key").as("dst"), col("comm")), Seq("dst"))
-            .groupBy(col("src").as("key"), col("comm")).agg(count(lit(1)).as("evc"))
-          val gains = evc.join(tot, Seq("comm")).join(deg, Seq("key"))
-            .withColumn("gain",
-              col("evc") - (col("deg").cast("double") * col("tot")) / lit(2.0 * (m2 / 2)))
-          // (gain desc, comm asc) argmax as one aggregation — min of the
-          // struct (-gain, comm); identical winners to the row_number()=1
-          // window rows (see Algorithms.louvainSweeps), no per-sweep sort.
-          comm = Algorithms.cut(gains
-            .groupBy("key")
-            .agg(min(struct((-col("gain")).as("ng"), col("comm").as("comm"))).as("s"))
-            .select(col("key"), col("s.comm").as("comm")))
-        }
+        // both levels are the g21 sweeps (Algorithms.louvainSweeps), which
+        // materialize their edge and degree frames once per level
+        val und = TpchGraph.undirected(TpchGraph.edges(s, d)).select("src", "dst")
+        val comm = Algorithms.louvainSweeps(und, TpchGraph.nodes(s, d).select("key"), 2)
         // contraction: super-nodes = level-0 communities, weighted edges.
-        // comm is re-read by su (twice) and the final projection — one
-        // lazy lineage cut instead of per-sweep materialization.
-        val commCut = comm // already cut by the sweep loop
-        val su = und
-          .join(commCut.select(col("key").as("src"), col("comm").as("csrc")), Seq("src"))
-          .join(commCut.select(col("key").as("dst"), col("comm").as("cdst")), Seq("dst"))
-          .groupBy(col("csrc").as("src"), col("cdst").as("dst")).agg(count(lit(1)).as("w"))
-          .transform(Algorithms.cut)
-        val degw = Algorithms.cut(
-          su.groupBy(col("src").as("key")).agg(sum("w").as("deg")))
-        var comm2 = su.select(col("src").as("key")).distinct()
-          .select(col("key"), col("key").as("comm"))
-        for (_ <- 1 to 2) {
-          val tot = comm2.join(degw, Seq("key")).groupBy("comm").agg(sum("deg").as("tot"))
-          val evc = su
-            .join(comm2.select(col("key").as("dst"), col("comm")), Seq("dst"))
-            .groupBy(col("src").as("key"), col("comm")).agg(sum("w").as("evc"))
-          val gains = evc.join(tot, Seq("comm")).join(degw, Seq("key"))
-            .withColumn("gain",
-              col("evc") - (col("deg").cast("double") * col("tot")) / lit(2.0 * (m2 / 2)))
-          // same min-struct argmax as the level-0 sweeps above
-          comm2 = Algorithms.cut(gains
-            .groupBy("key")
-            .agg(min(struct((-col("gain")).as("ng"), col("comm").as("comm"))).as("s"))
-            .select(col("key"), col("s.comm").as("comm")))
-        }
-        commCut.select(col("key"), col("comm").as("c0"))
+        // 2m (the total weight) is invariant under contraction.
+        val su = cut(und
+          .join(comm.select(col("key").as("src"), col("comm").as("csrc")), Seq("src"))
+          .join(comm.select(col("key").as("dst"), col("comm").as("cdst")), Seq("dst"))
+          .groupBy(col("csrc").as("src"), col("cdst").as("dst")).agg(count(lit(1)).as("w")))
+        val comm2 = Algorithms.louvainSweeps(su, su.select(col("src").as("key")).distinct(), 2)
+        comm.select(col("key"), col("comm").as("c0"))
           .join(comm2.select(col("key").as("c0"), col("comm").as("cf")), Seq("c0"))
           .groupBy(col("cf").as("comm")).agg(count(lit(1)).as("n_nodes"))
           .filter(col("n_nodes") >= 2)
@@ -1302,14 +1256,7 @@ object GraphQueries {
         val und = e.select(col("src"), col("dst"))
           .union(e.select(col("dst").as("src"), col("src").as("dst")))
         val n30 = und.select(col("src").as("key")).distinct()
-        var reach = n30.select(col("key").as("source"), col("key"), lit(0).as("dd"))
-        var frontier = reach
-        for (i <- 1 to 2) {
-          frontier = Algorithms.cut(frontier.join(und, col("key") === col("src"))
-            .select(col("source"), col("dst").as("key"), lit(i).as("dd")))
-          reach = reach.union(frontier)
-        }
-        reach.groupBy("source", "key").agg(min("dd").as("dd"))
+        Algorithms.sourceDistances(und, n30, Rounds(2))
           .filter(col("dd") > 0)
           .groupBy("source").agg(
             sum(when(col("dd") === 1, 1L).otherwise(0L)).as("n1"),
@@ -1554,8 +1501,8 @@ object GraphQueries {
         // un-cut, the whole 4-level BFS union+min-depth aggregate subtree
         // was duplicated into both join sides of the final plan (r13 §2.4;
         // the before-plan's two identical HashAggregate(Union ...) branches)
-        val par = Algorithms.cut(Algorithms
-          .bfsFrom(TpchGraph.undirected(TpchGraph.edges(s, d)), seeds, 3)
+        val par = cut(Algorithms
+          .bfs(TpchGraph.undirected(TpchGraph.edges(s, d)), seeds, Rounds(3))
           .select(col("key"), (col("depth") % 2).as("p")))
         TpchGraph.edges(s, d)
           .join(par.select(col("key").as("src"), col("p").as("ps")), Seq("src"))
@@ -1636,18 +1583,17 @@ object GraphQueries {
     "g42_eccentricity" -> QDef(
       (s, d) => {
         val n = Tables(s, d, "nation")
-        val e = Algorithms.cut(n.select(col("n_nationkey").as("ka"))
+        val e = cut(n.select(col("n_nationkey").as("ka"))
           .join(n.select(col("n_nationkey").as("kb")),
             col("ka") =!= col("kb") && abs(col("ka") - col("kb")) <= 7)
           .select(concat(lit("nation:"), col("ka").cast("string")).as("src"),
             concat(lit("nation:"), col("kb").cast("string")).as("dst")))
         val nodes = e.select(col("src").as("key")).distinct()
-        var reach = nodes.select(col("key").as("source"), col("key"), lit(0).as("dd"))
-        var frontier = reach
-        for (i <- 1 to 4) {
-          frontier = Algorithms.cut(frontier.join(e, col("key") === col("src"))
+        val start = nodes.select(col("key").as("source"), col("key"), lit(0).as("dd"))
+        val (reach, _) = Superstep.rounds(4, (start, start)) { case ((reach, frontier), i) =>
+          val next = cut(frontier.join(e, col("key") === col("src"))
             .select(col("source"), col("dst").as("key"), lit(i).as("dd")).distinct())
-          reach = reach.union(frontier)
+          (reach.union(next), next)
         }
         val ecc = reach.groupBy("source", "key").agg(min("dd").as("dd"))
           .groupBy("source").agg(max("dd").as("ecc"))

@@ -3,6 +3,7 @@ package graft.graph
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Property-graph view over the driver testdata (SURVEY.md §1.3 model:
   * `nodes(key, label, name)` + directed typed `edges(src, dst, etype)`),
@@ -23,11 +24,17 @@ object TpchGraph {
     * even at sf100), and the iterative algorithms re-reference them every
     * round — cache() so a 10-iteration PageRank does 1 scan, not 10.
     * Spark dedups cache entries by canonicalized plan, so repeated calls
-    * share one in-memory copy.
+    * share one in-memory copy; `cache()` runs only when the plan is not
+    * cached yet (calling it again only logs a warning). These stay Spark
+    * caches, not [[graft.Memo]] artifacts: Memo.clearArtifacts must not
+    * drop the base-table frames.
     */
-  def nodes(s: SparkSession, d: String): DataFrame = nodesUncached(s, d).cache()
-  def treeEdges(s: SparkSession, d: String): DataFrame = treeEdgesUncached(s, d).cache()
-  def sameRegionEdges(s: SparkSession, d: String): DataFrame = sameRegionEdgesUncached(s, d).cache()
+  def nodes(s: SparkSession, d: String): DataFrame = cached(nodesUncached(s, d))
+  def treeEdges(s: SparkSession, d: String): DataFrame = cached(treeEdgesUncached(s, d))
+  def sameRegionEdges(s: SparkSession, d: String): DataFrame = cached(sameRegionEdgesUncached(s, d))
+
+  private def cached(df: DataFrame): DataFrame =
+    if (df.storageLevel == StorageLevel.NONE) df.cache() else df
 
   private def nodesUncached(s: SparkSession, d: String): DataFrame = {
     val r = Tables(s, d, "region").select(k("region", "r_regionkey").as("key"), lit("region").as("label"), col("r_name").as("name"))
@@ -114,59 +121,29 @@ object TpchGraph {
         .distinct()))
 }
 
-/** Iterative-join graph algorithms with fixed iteration counts (no
-  * driver-side convergence loop) so results are deterministic and the
-  * driver's oracle can unroll the same number of steps in SQL.
-  *
-  * Lineage policy (measured, see round-3 PERF.md): an accumulator that the
-  * next iteration references twice (union + join) doubles the logical plan
-  * every round — unchecked that is 2^k by iteration k, and even bounded
-  * fusion loses on a COLD JVM, where every over-sized fused stage compiles
-  * fresh generated code. Loops therefore cut lineage every round by
-  * default (identical per-round plan shapes → Catalyst + codegen caches
-  * hit), with lazy/periodic/none variants selectable via GRAFT_CKPT_MODE
-  * for warm-loop embedding (see [[Algorithms.chk]]).
-  * At cluster scale each iteration is one shuffle on the node key.
+/** Iterative-join graph algorithms. Every loop runs on [[Superstep]],
+  * which owns the round counter, the per-round lineage cut and the stop
+  * rule. Gate queries run fixed round counts ([[Superstep.Rounds]]), so
+  * results are deterministic and the driver's oracle can unroll the same
+  * steps in SQL; the statement path runs the same functions to a probed
+  * fixpoint, where the graph is user-shaped and no round count can be
+  * justified up front. At cluster scale each round is one shuffle on the
+  * node key.
   *
   * Reference counterparts: BFS `graph_engine/src/lib.rs:4674-4790`,
   * shortest path `:4794-4930`, weighted `:4933-5070`, connected components
   * `:6898-6941`, PageRank `:6943-7055`.
   */
 object Algorithms {
-
-  /** Per-round lineage cut. The DEFAULT is an eager cut every round —
-    * measured this round (PERF.md §Round 3) as the best policy for a
-    * cold JVM, which is what the bench and any one-shot query sees: every
-    * iteration re-runs an identically-shaped small plan, so Catalyst
-    * work and generated code are cached across rounds. Fused/periodic
-    * variants win warm but lose 2–4× cold (unique oversized codegen per
-    * stage); they stay available via GRAFT_CKPT_MODE ("lazy1" = lazy cut
-    * every round, "periodic" = lazy cut every `every` rounds, "none") for
-    * warm-loop embedding, where "periodic" is the right choice.
-    */
-  private val ckptMode = sys.env.getOrElse("GRAFT_CKPT_MODE", "eager")
-  private def chk(df: DataFrame, i: Int, last: Int, every: Int = 4): DataFrame = ckptMode match {
-    case "lazy1" => df.localCheckpoint(false)
-    case "none" => df
-    case "periodic" => if (i % every == 0 && i != last) df.localCheckpoint(false) else df
-    case _ => df.localCheckpoint()
-  }
-
-  /** Loop-body lineage cut for call sites outside this object (same
-    * policy switch as [[chk]], without round bookkeeping). */
-  def cut(df: DataFrame): DataFrame = ckptMode match {
-    case "lazy1" | "periodic" => df.localCheckpoint(false)
-    case "none" => df
-    case _ => df.localCheckpoint()
-  }
+  import Superstep.{cut, Fixpoint, Rounds, Stop, UpTo}
 
   /** Materialization for SHARED artifacts — memoized frames consumed by
     * several queries (the g08/g28 co-occurrence aggregate, the d04/d10
     * shingle table, the d03/d07 pair set) or by several stages of one
-    * query. Unlike [[cut]], whose job is severing ITERATIVE lineage and
-    * which pays an RDD write + re-read of every row up front, a shared
-    * artifact wants the columnar cache: compressed in-memory batches,
-    * built on first use, spilled only under pressure, and a leaf
+    * query. Unlike [[Superstep.cut]], whose job is severing ITERATIVE
+    * lineage and which pays an RDD write + re-read of every row up front,
+    * a shared artifact wants the columnar cache: compressed in-memory
+    * batches, built on first use, spilled only under pressure, and a leaf
     * (InMemoryRelation) in every downstream plan, so lineage is equally
     * truncated. Measured at sf1.0 (PERF.md round 9): g08 paid 156 s
     * with an eager localCheckpoint of its 5e7-row pair aggregate vs
@@ -175,22 +152,33 @@ object Algorithms {
     * table and re-shipping it through the block manager row by row. */
   def memo(df: DataFrame): DataFrame = df.cache()
 
-  /** Min-depth BFS from `source` to `maxDepth` over `edges` (directed as
-    * given — pass the symmetric closure for undirected semantics).
-    * Returns (key, depth).
+  /** A one-row seed frame (`key`) for single-source traversals. */
+  def source(s: SparkSession, key: String): DataFrame = s.range(1).select(lit(key).as("key"))
+
+  /** Min-depth BFS from the `seeds` keys (distinct, depth 0) over `edges`
+    * (directed as given — pass the symmetric closure for undirected
+    * semantics). One frontier⋈edges join per level is shared across all
+    * seeds, so several seeds give distance-to-nearest-seed without
+    * |seeds| separate traversals. Returns (key, depth).
+    *
+    * `stop`: [[Superstep.Rounds]] explores exactly that many levels (the
+    * gate queries); [[Superstep.Fixpoint]] runs until the frontier is
+    * empty, giving every reachable node its true distance, and throws
+    * past the cap. The anti-join against the reached set makes the
+    * frontier strictly shrink toward that fixpoint.
     *
     * Traversal filters (reference `graph_engine/src/lib.rs:4674-4790`
     * takes a `TraversalFilter`, `lib.rs:482-654`, with node and edge
     * predicates): `edgePred` keeps only edges satisfying the predicate
     * (e.g. `col("etype") === "in_nation"`); `allowedNodes` restricts
     * which nodes the frontier may ENTER (a one-column `key` frame,
-    * semi-joined against edge destinations). The source is always
+    * semi-joined against edge destinations). The seeds are always
     * included, matching the reference's start-node semantics. Both
     * filters are applied ONCE to the edge frame before the loop, so the
     * per-round plan shape is identical to the unfiltered BFS — at
     * cluster scale the filter rides the edge scan for free.
     */
-  def bfs(edges: DataFrame, source: String, maxDepth: Int,
+  def bfs(edges: DataFrame, seeds: DataFrame, stop: Stop,
       edgePred: Option[Column] = None,
       allowedNodes: Option[DataFrame] = None): DataFrame = {
     val eFiltered = edgePred.map(edges.filter).getOrElse(edges)
@@ -203,66 +191,15 @@ object Algorithms {
         .select("src", "dst")
       case None => eFiltered.select("src", "dst")
     })
-    var reached = edges.sparkSession.range(1).select(lit(source).as("key"), lit(0).as("depth"))
-    var frontier = reached
-    for (i <- 1 to maxDepth) {
-      val next = chk(frontier.join(e, col("key") === col("src"))
-        .select(col("dst").as("key"), lit(i).as("depth"))
-        .distinct()
-        .join(reached.select(col("key").as("seen")), col("key") === col("seen"), "left_anti"),
-        i, maxDepth)
-      reached = reached.union(next)
-      frontier = next
-    }
-    // min() guards duplicate keys if maxDepth revisits via shorter paths
-    reached.groupBy("key").agg(min("depth").cast("int").as("depth"))
-  }
-
-  /** Multi-source BFS: like [[bfs]] but seeded from a whole frame of
-    * start keys at depth 0 (one frontier⋈edges join per level, shared
-    * across all sources — the standard way to compute distance-to-
-    * nearest-landmark without |sources| separate traversals).
-    */
-  def bfsFrom(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
-    val e = cut(edges.select("src", "dst")) // loop-invariant (see [[bfs]])
-    var reached = seeds.select(col("key")).distinct().withColumn("depth", lit(0))
-    var frontier = reached
-    for (i <- 1 to maxDepth) {
-      val next = chk(frontier.join(e, col("key") === col("src"))
-        .select(col("dst").as("key"), lit(i).as("depth"))
-        .distinct()
-        .join(reached.select(col("key").as("seen")), col("key") === col("seen"), "left_anti"),
-        i, maxDepth)
-      reached = reached.union(next)
-      frontier = next
-    }
-    reached.groupBy("key").agg(min("depth").cast("int").as("depth"))
-  }
-
-  /** [[bfsFrom]] run until the frontier exhausts — the statement-path
-    * variant for user-shaped graphs where no depth bound is justifiable.
-    * Level-synchronous with an anti-join against the reached set, so the
-    * frontier strictly shrinks toward fixpoint; throws past `roundCap`
-    * (safety, not semantics). Returns (key, depth) for every reachable
-    * node at its true BFS distance. */
-  def bfsFromFixpoint(edges: DataFrame, seeds: DataFrame, roundCap: Int = 256): DataFrame = {
-    val e = cut(edges.select("src", "dst"))
-    var reached = cut(seeds.select(col("key")).distinct().withColumn("depth", lit(0)))
-    var frontier = reached
-    var i = 0
-    var alive = frontier.limit(1).count() > 0
-    while (alive) {
-      i += 1
-      if (i > roundCap) throw new IllegalStateException(
-        s"bfsFromFixpoint exceeded $roundCap levels — graph depth over the safety cap")
+    val start = seeds.select(col("key"), lit(0).as("depth"))
+    val (reached, _) = Superstep.run(stop, (start, start)) { case ((reached, frontier), i) =>
       val next = cut(frontier.join(e, col("key") === col("src"))
         .select(col("dst").as("key"), lit(i).as("depth"))
         .distinct()
         .join(reached.select(col("key").as("seen")), col("key") === col("seen"), "left_anti"))
-      reached = reached.union(next)
-      frontier = next
-      alive = frontier.limit(1).count() > 0
-    }
+      (reached.union(next), next)
+    } { case (_, (_, next)) => next.count() == 0 }
+    // min() guards duplicate keys if maxDepth revisits via shorter paths
     reached.groupBy("key").agg(min("depth").cast("int").as("depth"))
   }
 
@@ -272,16 +209,17 @@ object Algorithms {
     * the RNG replaced by a content hash so any engine replays the exact
     * walk. One frontier⋈edges join per hop (keyed on the current node),
     * so the frontier stays ∝ the number of walks, never the graph size.
+    * The walk frame is not cut: a few hops stay one fused plan.
     * Returns (walk_id, cur, path); a walk whose node has no out-edge
     * simply ends (drops out of the frontier).
     */
   def hashGreedyWalk(und: DataFrame, seeds: DataFrame, steps: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
     val e = cut(und.select("src", "dst")) // loop-invariant (see [[bfs]])
-    var f = seeds.select(col("key").as("walk_id"), col("key").as("cur"),
+    val start = seeds.select(col("key").as("walk_id"), col("key").as("cur"),
       col("key").as("path"))
-    for (i <- 1 to steps) {
-      f = f.join(e, col("cur") === col("src"))
+    Superstep.rounds(steps, start) { (f, i) =>
+      f.join(e, col("cur") === col("src"))
         .withColumn("h",
           md5(concat_ws("|", lit(i.toString), col("cur"), col("dst")).cast("binary")))
         .withColumn("rn", row_number().over(
@@ -290,7 +228,6 @@ object Algorithms {
         .select(col("walk_id"), col("dst").as("cur"),
           concat(col("path"), lit("->"), col("dst")).as("path"))
     }
-    f
   }
 
   /** Bounded-hop single-source shortest paths over weighted edges
@@ -299,40 +236,45 @@ object Algorithms {
     */
   def sssp(edges: DataFrame, source: String, iters: Int): DataFrame = {
     val e = cut(edges.select("src", "dst", "w")) // loop-invariant (see [[bfs]])
-    var dist = edges.sparkSession.range(1).select(lit(source).as("key"), lit(0.0).as("cost"))
-    for (i <- 1 to iters) {
+    val start = edges.sparkSession.range(1).select(lit(source).as("key"), lit(0.0).as("cost"))
+    Superstep.rounds(iters, start) { (dist, _) =>
       val relaxed = dist.join(e, col("key") === col("src"))
         .select(col("dst").as("key"), (col("cost") + col("w")).as("cost"))
-      dist = chk(dist.union(relaxed).groupBy("key").agg(min("cost").as("cost")), i, iters)
+      cut(dist.union(relaxed).groupBy("key").agg(min("cost").as("cost")))
     }
-    dist
   }
 
-  /** Connected components by min-key label propagation, `iters` rounds
-    * (pick iters ≥ graph diameter). Returns (key, component).
+  /** One min-label propagation round: every node takes the min of its
+    * own and its neighbors' components. */
+  private def minLabelHop(labels: DataFrame, e: DataFrame): DataFrame =
+    labels.union(labels.join(e, col("key") === col("src"))
+        .select(col("dst").as("key"), col("component")))
+      .groupBy("key").agg(min("component").as("component"))
+
+  /** Convergence probe: one more [[minLabelHop]] leaves every label
+    * unchanged. */
+  private def stable(labels: DataFrame, e: DataFrame): Boolean =
+    labels.join(minLabelHop(labels, e).select(col("key"), col("component").as("c2")), Seq("key"))
+      .filter(col("component") =!= col("c2")).count() == 0
+
+  /** Connected components by min-key label propagation. Returns (key,
+    * component = min key in the component).
+    *
+    * `stop`: [[Superstep.Rounds]] runs that many rounds (pick them ≥ the
+    * graph diameter). [[Superstep.Fixpoint]] probes after every round that
+    * one more round would change no label, and throws if the cap is
+    * reached first: below the diameter the labeling is silently split
+    * into sub-components, an error class a fixed-round oracle CANNOT
+    * catch, because both engines would be wrong identically. Labels at a
+    * probed fixpoint equal the fixed-round labels.
     */
-  def connectedComponents(undirectedEdges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
+  def connectedComponents(undirectedEdges: DataFrame, nodes: DataFrame, stop: Stop): DataFrame = {
     // the edge frame is loop-invariant — materialize once (see [[pageRank]])
     val e = cut(undirectedEdges.select("src", "dst"))
-    var labels = nodes.select(col("key"), col("key").as("component"))
-    for (i <- 1 to iters) {
-      val viaNeighbor = labels.join(e, col("key") === col("src"))
-        .select(col("dst").as("key"), col("component"))
-      labels = chk(labels.union(viaNeighbor).groupBy("key").agg(min("component").as("component")),
-        i, iters)
-    }
-    labels
+    Superstep.run(stop, nodes.select(col("key"), col("key").as("component")))(
+      (labels, _) => cut(minLabelHop(labels, e)))((_, labels) => stable(labels, e))
   }
 
-  /** [[connectedComponents]] plus a convergence probe: one extra
-    * propagation round must leave every label unchanged, else `iters` was
-    * below the graph's diameter and the labeling is silently split into
-    * sub-components — an error class a fixed-round oracle CANNOT catch,
-    * because both engines would be wrong identically. Fails loudly
-    * instead. The probe is one extra join+agg over the final (already
-    * materialized) labels; the returned frame is the plain iters-round
-    * result, so oracle parity is unaffected.
-    */
   /** Every triangle of the u<v-canonical simple edge frame `e0`, listed
     * EXACTLY once as a (a, b, c) corner triple (b < c in key order), via
     * the degree-ordered orientation (Schank & Wagner 2005, "Finding,
@@ -405,47 +347,32 @@ object Algorithms {
     * recomputes [[edgeSupport]] on the shrinking edge set — the
     * degree-ordered O(|E|^{3/2}) wedge bound, not the Σ deg² of a
     * center-keyed adjacency intersection — and the edge set only
-    * shrinks. `rounds` must reach the peeling fixpoint; like
-    * [[connectedComponentsChecked]], one extra recompute VERIFIES that
-    * (silent non-convergence would match an identically-unrolled oracle
-    * and pass the parity gate undetected).
+    * shrinks. The loop stops at the first round whose edge set a further
+    * peel leaves unchanged, and throws if that takes more than `rounds`
+    * rounds (silent non-convergence would match an identically-unrolled
+    * oracle and pass the parity gate undetected).
     */
   def ktruss(und: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     def peel(e: DataFrame): DataFrame =
       e.join(edgeSupport(e).filter(col("sup") >= k - 2).select("u", "v"), Seq("u", "v"))
-    var e = cut(und.select("u", "v"))
-    for (i <- 1 to rounds) e = chk(peel(e), i, rounds)
-    if (peel(e).count() != e.count()) throw new IllegalStateException(
-      s"ktruss did not reach its fixpoint in $rounds rounds (a further peel still " +
-        "removes edges) — raise the round count")
-    e
+    // state (edges, their peel): the probe compares the two, and the next
+    // round's edges are that peel, so every round peels once
+    val e0 = cut(und.select("u", "v"))
+    Superstep.run(Fixpoint(rounds), (e0, cut(peel(e0))))((s, _) => (s._2, cut(peel(s._2))))(
+      (_, s) => s._1.count() == s._2.count())._1
   }
 
-  def connectedComponentsChecked(undirectedEdges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
-    val labels = connectedComponents(undirectedEdges, nodes, iters)
-    val e = undirectedEdges.select("src", "dst")
-    val next = labels.union(
-        labels.join(e, col("key") === col("src")).select(col("dst").as("key"), col("component")))
-      .groupBy("key").agg(min("component").as("c2"))
-    val changed = labels.join(next, Seq("key"))
-      .filter(col("component") =!= col("c2")).limit(1).count()
-    if (changed > 0) throw new IllegalStateException(
-      s"connectedComponents did not converge in $iters rounds (a further round still " +
-        "changes labels) — raise the iteration count above the graph diameter")
-    labels
-  }
-
-  /** Connected components run to FIXPOINT, for statement-path use where
-    * the graph is user-shaped (overlay nodes/edges of arbitrary diameter)
-    * and no round count can be justified up front. Each round is one
+  /** Connected components to FIXPOINT with pointer jumping, for
+    * statement-path use where the graph is user-shaped (overlay
+    * nodes/edges of arbitrary diameter). Each round is one
     * min-of-neighbors hop PLUS one pointer-jump (component ←
     * label(component)), so chains collapse in O(log diameter) rounds
-    * rather than O(diameter); after every batch a convergence probe (one
-    * extra hop compared against the current labels — the same check as
-    * [[connectedComponentsChecked]]) decides whether to continue. Batches
-    * grow geometrically so the total probe count is logarithmic in the
-    * rounds actually needed. Throws if `roundCap` rounds don't converge
+    * rather than O(diameter). The convergence probe (the same one-more-
+    * hop check as [[connectedComponents]]) runs after batches of 4, 8,
+    * 16, … rounds and at the cap, so the probe count is logarithmic in
+    * the rounds actually needed; `stop` defaults to
+    * [[Superstep.Fixpoint]], which throws if the cap is reached first
     * (a graph that deep is a misuse signal, not a silent-wrong-answer
     * license). Returns (key, component = min key in the component) —
     * identical labeling to [[connectedComponents]] at convergence.
@@ -455,38 +382,20 @@ object Algorithms {
     * with a convergence guarantee instead of Rust's in-memory BFS.
     */
   def connectedComponentsFixpoint(undirectedEdges: DataFrame, nodes: DataFrame,
-      firstBatch: Int = 4, roundCap: Int = 256): DataFrame = {
+      stop: Stop = Fixpoint()): DataFrame = {
     val e = cut(undirectedEdges.select("src", "dst"))
-    var labels = cut(nodes.select(col("key"), col("key").as("component")))
-    var total = 0
-    var batch = firstBatch
-    var converged = false
-    while (!converged && total < roundCap) {
-      val rounds = math.min(batch, roundCap - total)
-      for (_ <- 1 to rounds) {
-        val hop = labels.join(e, col("key") === col("src"))
-          .select(col("dst").as("key"), col("component"))
-        val merged = labels.union(hop).groupBy("key").agg(min("component").as("component"))
-        // pointer-jump: every label value is itself a node key, so one
-        // self-join rewrites component → label(component), halving chain
-        // depth per round (the classic CC shortcut).
-        labels = cut(merged.join(
-            merged.select(col("key").as("component"), col("component").as("__jump")),
-            Seq("component"), "left")
-          .select(col("key"), coalesce(col("__jump"), col("component")).as("component")))
-      }
-      total += rounds
-      batch *= 2
-      val next = labels.union(
-          labels.join(e, col("key") === col("src")).select(col("dst").as("key"), col("component")))
-        .groupBy("key").agg(min("component").as("c2"))
-      converged = labels.join(next, Seq("key"))
-        .filter(col("component") =!= col("c2")).limit(1).count() == 0
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsFixpoint did not converge within $roundCap rounds — " +
-        "graph diameter exceeds the safety cap")
-    labels
+    val start = cut(nodes.select(col("key"), col("key").as("component")))
+    def batchEnd(i: Int) = i == stop.n || (i % 4 == 0 && Integer.bitCount(i / 4 + 1) == 1)
+    Superstep.run(stop, (start, 0)) { case ((labels, _), i) =>
+      val merged = minLabelHop(labels, e)
+      // pointer-jump: every label value is itself a node key, so one
+      // self-join rewrites component → label(component), halving chain
+      // depth per round (the classic CC shortcut).
+      (cut(merged.join(
+          merged.select(col("key").as("component"), col("component").as("__jump")),
+          Seq("component"), "left")
+        .select(col("key"), coalesce(col("__jump"), col("component")).as("component"))), i)
+    } { case (_, (labels, i)) => batchEnd(i) && stable(labels, e) }._1
   }
 
   /** Min label of any node reachable (in ≤ iters hops) along directed
@@ -494,13 +403,11 @@ object Algorithms {
     */
   def minReachLabel(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
     val e = cut(edges.select("src", "dst")) // loop-invariant (see [[bfs]])
-    var f = nodes.select(col("key"), col("key").as("lbl"))
-    for (i <- 1 to iters) {
+    Superstep.rounds(iters, nodes.select(col("key"), col("key").as("lbl"))) { (f, _) =>
       val pulled = e.join(f.select(col("key").as("dst"), col("lbl")), Seq("dst"))
         .select(col("src").as("key"), col("lbl"))
-      f = chk(f.union(pulled).groupBy("key").agg(min("lbl").as("lbl")), i, iters)
+      cut(f.union(pulled).groupBy("key").agg(min("lbl").as("lbl")))
     }
-    f
   }
 
   /** Directed reachability closure by squaring: after k rounds the frame
@@ -513,17 +420,13 @@ object Algorithms {
     * undirected/symmetric closures, where the closure is quadratic in
     * component size.
     */
-  def reachClosure(edges: DataFrame, rounds: Int): DataFrame = {
-    var c = edges.select("src", "dst").distinct()
-    for (i <- 1 to rounds) {
+  def reachClosure(edges: DataFrame, rounds: Int): DataFrame =
+    Superstep.rounds(rounds, edges.select("src", "dst").distinct()) { (c, _) =>
       val two = c.select(col("src"), col("dst").as("mid"))
         .join(c.select(col("src").as("mid"), col("dst")), Seq("mid"))
         .select("src", "dst")
-      // 3 references per round → plan ×3^rounds unchecked; cut every 2.
-      c = chk(c.union(two).distinct(), i, rounds, 2)
+      cut(c.union(two).distinct())
     }
-    c
-  }
 
   /** Strongly connected components via forward/backward min-label
     * reachability: nodes sharing the pair (min forward-reachable label,
@@ -554,21 +457,20 @@ object Algorithms {
     // has-out ∩ has-in core set is ONE endpoint aggregation instead of the
     // previous two distincts + join: same membership (max(o)=1 ⇔ the key
     // appears as some src, max(i)=1 ⇔ as some dst), one exchange.
-    var e = Algorithms.cut(edges.select("src", "dst"))
-    for (i <- 1 to trimRounds) {
-      val core = Algorithms.cut(
+    val e = Superstep.rounds(trimRounds, cut(edges.select("src", "dst"))) { (e, _) =>
+      val core = cut(
         e.select(col("src").as("key"), lit(1).as("o"), lit(0).as("i"))
           .union(e.select(col("dst").as("key"), lit(0).as("o"), lit(1).as("i")))
           .groupBy("key").agg(max("o").as("o"), max("i").as("i"))
           .filter(col("o") === 1 && col("i") === 1)
           .select("key"))
-      e = Algorithms.cut(
+      cut(
         e.join(core.select(col("key").as("src")), Seq("src"), "left_semi")
           .join(core.select(col("key").as("dst")), Seq("dst"), "left_semi")
           .select("src", "dst"))
     }
     val rounds = math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, iters - 1)))
-    val cl = reachClosure(e, rounds).localCheckpoint(false)
+    val cl = reachClosure(e, rounds) // materialized by its last round's cut
     val coreNodes = e.select(col("src").as("key"))
       .union(e.select(col("dst").as("key"))).distinct()
     val fwd = coreNodes.select(col("key"), col("key").as("lbl"))
@@ -590,12 +492,12 @@ object Algorithms {
   /** Label propagation (the g15 engine, parameterized for the
     * `GRAPH LABELPROP` statement): `iters` rounds of majority-label
     * adoption with (count desc, label) tie-break — one neighbor-join +
-    * windowed argmax per round, lineage-cut. Returns (key, lbl). */
+    * one min-struct argmax aggregation per round, lineage-cut. Returns
+    * (key, lbl). */
   def labelPropagation(und: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
     // edge frame is loop-invariant — materialize once (see [[pageRank]])
     val e = cut(und.select("src", "dst"))
-    var labels = nodes.select(col("key"), col("key").as("lbl"))
-    for (_ <- 1 to iters) {
+    Superstep.rounds(iters, nodes.select(col("key"), col("key").as("lbl"))) { (labels, _) =>
       val counts = e
         .join(labels.select(col("key").as("dst"), col("lbl")), Seq("dst"))
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
@@ -605,100 +507,93 @@ object Algorithms {
       // (desc(c), lbl) row_number()=1 row, but with map-side partial
       // aggregation and no per-round sort (guide §2.3 "aggregate before
       // you shuffle"; round 13).
-      labels = cut(counts
+      cut(counts
         .groupBy(col("src").as("key"))
         .agg(min(struct((-col("c")).as("nc"), col("lbl").as("lbl"))).as("s"))
         .select(col("key"), col("s.lbl").as("lbl")))
     }
-    labels
   }
 
-  /** Bounded-depth closeness centrality (the g18 engine, parameterized
-    * for `GRAPH CLOSENESS`): multi-source BFS to `maxDepth`, then
-    * (reached − 1) / Σdist per source. All sources sweep in ONE batched
-    * frame (the g34/g42 multi-source pattern). Returns (key, closeness). */
-  def closenessBounded(und: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame = {
+  /** Multi-source BFS distances (source, key, dd = min hops) from every
+    * `sources` key, all sources sweeping in ONE batched frame. Under
+    * [[Superstep.Rounds]] the frontier skips the reached-set anti-join
+    * (cheap for the gate queries' horizon of 2, and min(dd) dedupes
+    * after the fact), matching the unrolled oracle. That frontier never
+    * empties on a cyclic graph, so a probed rule runs the anti-join body:
+    * each round keeps only first-visited (source, key) pairs, the
+    * frontier strictly shrinks, and the loop ends when every source has
+    * exhausted its component. */
+  def sourceDistances(und: DataFrame, sources: DataFrame, stop: Stop): DataFrame = {
     val e = cut(und.select("src", "dst")) // loop-invariant (see [[bfs]])
-    var reach = sources.select(col("key").as("source"), col("key"), lit(0).as("dd"))
-    var frontier = reach
-    for (i <- 1 to maxDepth) {
-      frontier = cut(frontier.join(e, col("key") === col("src"))
-        .select(col("source"), col("dst").as("key"), lit(i).as("dd")))
-      reach = reach.union(frontier)
-    }
-    reach.groupBy("source", "key").agg(min("dd").as("dd"))
-      .groupBy("source").agg(count(lit(1)).as("cnt"), sum("dd").as("sd"))
-      .select(col("source").as("key"),
-        round((col("cnt") - 1) / col("sd"), 6).as("closeness"))
-  }
-
-  /** [[closenessBounded]] run to BFS fixpoint — the statement-path
-    * variant. The bounded form's frontier deliberately skips the
-    * reached-set anti-join (cheap when the horizon is 2, and min(dd)
-    * dedupes after the fact), but that frontier never empties on a cyclic
-    * graph, so the fixpoint form restores the anti-join: each round keeps
-    * only first-visited (source, key) pairs, the frontier strictly
-    * shrinks, and the loop ends when every source has exhausted its
-    * component. Exact closeness on arbitrary topology; throws past
-    * `roundCap`. */
-  def closenessFixpoint(und: DataFrame, sources: DataFrame, roundCap: Int = 64): DataFrame = {
-    val e = cut(und.select("src", "dst"))
-    var reach = cut(sources.select(col("key").as("source"), col("key"), lit(0).as("dd")))
-    var frontier = reach
-    var i = 0
-    var alive = frontier.limit(1).count() > 0
-    while (alive) {
-      i += 1
-      if (i > roundCap) throw new IllegalStateException(
-        s"closenessFixpoint exceeded $roundCap levels — graph depth over the safety cap")
-      frontier = cut(frontier.join(e, col("key") === col("src"))
+    val start = sources.select(col("key").as("source"), col("key"), lit(0).as("dd"))
+    val (reach, _) = Superstep.run(stop, (start, start)) { case ((reach, frontier), i) =>
+      val hop = frontier.join(e, col("key") === col("src"))
         .select(col("source"), col("dst").as("key"), lit(i).as("dd"))
-        .distinct()
-        .join(reach.select(col("source"), col("key")), Seq("source", "key"), "left_anti"))
-      reach = reach.union(frontier)
-      alive = frontier.limit(1).count() > 0
-    }
+      val next = cut(stop match {
+        case Rounds(_) => hop
+        case _ => hop.distinct()
+          .join(reach.select(col("source"), col("key")), Seq("source", "key"), "left_anti")
+      })
+      (reach.union(next), next)
+    } { case (_, (_, next)) => next.count() == 0 }
     reach.groupBy("source", "key").agg(min("dd").as("dd"))
+  }
+
+  /** Closeness centrality (the g18 engine, and `GRAPH CLOSENESS` run to
+    * fixpoint): (reached − 1) / Σdist per source over
+    * [[sourceDistances]]. Returns (key, closeness). */
+  def closeness(und: DataFrame, sources: DataFrame, stop: Stop): DataFrame =
+    sourceDistances(und, sources, stop)
       .groupBy("source").agg(count(lit(1)).as("cnt"), sum("dd").as("sd"))
       .select(col("source").as("key"),
         round((col("cnt") - 1) / col("sd"), 6).as("closeness"))
-  }
 
-  /** One-level Louvain sweeps (the g21 engine, parameterized for
+  /** One-level Louvain sweeps (the g21 engine, both g23 levels, and
     * `GRAPH LOUVAIN`): each sweep moves every node to the
     * modularity-argmax neighboring community ((gain desc, comm)
-    * tie-break). Returns (key, comm).
+    * tie-break). Edges carry weight `w` when `und` has that column (g23's
+    * contracted super-graph), else 1. Returns (key, comm).
     *
     * `resolution` is the reference's CommunityConfig resolution γ
     * (`graph_engine/src/lib.rs:7442`): gain = evc − γ·deg·tot/2m, so
-    * γ > 1 favors smaller communities, γ < 1 larger ones. */
+    * γ > 1 favors smaller communities, γ < 1 larger ones. Every gain
+    * input is an integer and γ = 1.0 multiplies exactly, so the gains
+    * are the bit-identical doubles the unrolled oracle computes. */
   def louvainSweeps(und: DataFrame, nodes: DataFrame, sweeps: Int,
       resolution: Double = 1.0): DataFrame = {
     // edge + degree frames are loop-invariant — materialize once (§2.4)
-    val e = cut(und.select("src", "dst"))
-    val deg = cut(e.groupBy(col("src").as("key")).agg(count(lit(1)).as("deg")))
-    val m2 = e.count().toDouble // = 2m (symmetric closure; e is materialized)
-    var comm = nodes.select(col("key"), col("key").as("comm"))
-    for (_ <- 1 to sweeps) {
+    val w = if (und.columns.contains("w")) col("w") else lit(1L)
+    val e = cut(und.select(col("src"), col("dst"), w.as("w")))
+    val deg = cut(e.groupBy(col("src").as("key")).agg(sum("w").as("deg")))
+    // = 2m: the symmetric closure's total edge weight
+    val m2 = e.agg(coalesce(sum("w"), lit(0L))).first().getLong(0).toDouble
+    Superstep.rounds(sweeps, nodes.select(col("key"), col("key").as("comm"))) { (comm, _) =>
       val tot = comm.join(deg, Seq("key")).groupBy("comm").agg(sum("deg").as("tot"))
       val evc = e
         .join(comm.select(col("key").as("dst"), col("comm")), Seq("dst"))
-        .groupBy(col("src").as("key"), col("comm")).agg(count(lit(1)).as("evc"))
+        .groupBy(col("src").as("key"), col("comm")).agg(sum("w").as("evc"))
       val gains = evc.join(tot, Seq("comm")).join(deg, Seq("key"))
         .withColumn("gain",
           col("evc") - lit(resolution) * (col("deg").cast("double") * col("tot")) / lit(2.0 * (m2 / 2)))
       // argmax by (gain desc, comm asc) as ONE aggregation: min of the
-      // struct (-gain, comm) — IEEE sign flip is exact, and Spark's double
-      // ordering (java.lang.Double.compare) ranks -0.0 < 0.0 exactly as
-      // the desc window did, so the winning (key, comm) rows are
-      // identical to the row_number()=1 rows (see [[labelPropagation]]).
-      comm = cut(gains
+      // struct (-gain, comm). The sign flip is exact, and the gains are
+      // finite (integer inputs, 2m > 0 whenever an edge exists), so the
+      // NaN ordering difference between the struct min and the desc
+      // window cannot arise; Spark orders -0.0 and 0.0 as equal in both,
+      // falling through to comm. The winning (key, comm) rows are the
+      // row_number()=1 rows of the window (see [[labelPropagation]]).
+      cut(gains
         .groupBy("key")
         .agg(min(struct((-col("gain")).as("ng"), col("comm").as("comm"))).as("s"))
         .select(col("key"), col("s.comm").as("comm")))
     }
-    comm
   }
+
+  /** Max |Δ| of column `c` between two rounds' (key, c) frames — the
+    * tolerance probe of [[pageRank]] and [[eigenvector]]. */
+  private def maxChange(prev: DataFrame, next: DataFrame, c: String): Double =
+    next.join(prev.select(col("key"), col(c).as("__prev")), Seq("key"))
+      .agg(max(abs(col(c) - col("__prev")))).collect()(0).getDouble(0)
 
   /** Eigenvector centrality: power iteration x ← A·x / max(A·x) over the
     * undirected adjacency, `iters` fixed rounds from x₀ = 1. Max-
@@ -715,28 +610,16 @@ object Algorithms {
     // loop-invariant frames materialize once (see [[pageRank]])
     val e = cut(undirectedEdges.select("src", "dst"))
     val keys = cut(nodes.select(col("key")))
-    var x = keys.select(col("key"), lit(1.0).as("x"))
-    var i = 1
-    var converged = false
-    while (i <= iters && !converged) {
-      val prev = x
+    val stop = if (tolerance > 0) UpTo(iters) else Rounds(iters)
+    Superstep.run(stop, keys.select(col("key"), lit(1.0).as("x"))) { (x, _) =>
       val ax = x.join(e, col("key") === col("src"))
         .groupBy(col("dst").as("key")).agg(sum("x").as("ax"))
       val mx = ax.agg(max("ax").as("mx"))
-      // ax is referenced twice (values + max) → plan ×~2/round; cut every 3.
-      x = chk(keys
+      cut(keys
         .join(ax, Seq("key"), "left")
         .crossJoin(mx)
-        .select(col("key"), (coalesce(col("ax"), lit(0.0)) / col("mx")).as("x")),
-        i, iters, 3)
-      if (tolerance > 0) {
-        val d = x.join(prev.select(col("key"), col("x").as("px")), Seq("key"))
-          .agg(max(abs(col("x") - col("px"))).as("d")).collect()(0).getDouble(0)
-        converged = d < tolerance
-      }
-      i += 1
-    }
-    x
+        .select(col("key"), (coalesce(col("ax"), lit(0.0)) / col("mx")).as("x")))
+    } { (prev, x) => maxChange(prev, x, "x") < tolerance }
   }
 
   /** HITS hubs & authorities (Kleinberg): `iters` rounds of
@@ -748,8 +631,8 @@ object Algorithms {
     * and both joins reuse it.
     */
   def hits(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
-    // `a` below is assigned inside the loop; iters < 1 would leave it null
-    // and NPE at the final join — fail loudly at the boundary instead.
+    // the auth frame is first built in round 1; iters < 1 would return
+    // the placeholder below — fail loudly at the boundary instead.
     require(iters >= 1, s"HITS requires iters >= 1, got $iters")
     // both half-rounds re-read the edge frame — materialize once (§2.4)
     val e = cut(edges.select("src", "dst"))
@@ -760,21 +643,17 @@ object Algorithms {
     // scores here — so dropping zero rows from the LOOP is bit-identical
     // to the dense recurrence (max-normalization sees the same nonzero
     // population). The dense view is reconstructed ONCE at the end.
-    var h = keys.select(col("key"), lit(1.0).as("hub"))
-    var a: DataFrame = null
-    for (i <- 1 to iters) {
+    val hub0 = keys.select(col("key"), lit(1.0).as("hub"))
+    val (h, a) = Superstep.rounds(iters, (hub0, hub0)) { case ((h, _), _) =>
       val a0 = h.join(e, col("key") === col("src"))
         .groupBy(col("dst").as("key")).agg(sum("hub").as("a0"))
       val am = a0.agg(max("a0").as("am"))
-      a = chk(a0.crossJoin(am)
-        .select(col("key"), (col("a0") / col("am")).as("auth")),
-        i, iters, 3)
+      val a = cut(a0.crossJoin(am)
+        .select(col("key"), (col("a0") / col("am")).as("auth")))
       val h0 = a.join(e, col("key") === col("dst"))
         .groupBy(col("src").as("key")).agg(sum("auth").as("h0"))
       val hm = h0.agg(max("h0").as("hm"))
-      h = chk(h0.crossJoin(hm)
-        .select(col("key"), (col("h0") / col("hm")).as("hub")),
-        i, iters, 3)
+      (cut(h0.crossJoin(hm).select(col("key"), (col("h0") / col("hm")).as("hub"))), a)
     }
     keys.join(h, Seq("key"), "left").join(a, Seq("key"), "left")
       .select(col("key"), coalesce(col("hub"), lit(0.0)).as("hub"),
@@ -789,65 +668,43 @@ object Algorithms {
     * pass accumulates dependencies δ(v) = Σ_w (σ_v/σ_w)(1+δ_w) level by
     * level from the deepest ring inward. bc(v) = Σ_{s∈sources} δ_s(v).
     *
+    * `stop` bounds the forward BFS: [[Superstep.Rounds]] is a fixed
+    * horizon (the gate query); [[Superstep.Fixpoint]] runs until every
+    * source exhausts its component — on user-shaped graphs a fixed
+    * horizon silently drops every shortest path longer than it — and
+    * throws past the cap. The forward expansion anti-joins the reached
+    * set, so its frontier empties naturally at fixpoint; the backward
+    * accumulation then walks the levels actually discovered.
+    *
     * With all sources it is exact Brandes; with a deterministic sample it
     * is the standard pivot estimator — O(|sources|·E) instead of O(V·E),
     * which is the only form that survives 100 TB graphs. Every stage is a
     * shuffle on (source, key): at cluster scale the frontier frames
     * partition by source and stream.
     */
-  def betweennessBrandes(und: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame =
-    brandesImpl(und, sources, maxDepth, probe = false)
-
-  /** [[betweennessBrandes]] with the forward BFS run until every source
-    * exhausts its component — the statement-path variant for user-shaped
-    * graphs, where a fixed horizon silently drops every shortest path
-    * longer than it. The forward expansion already anti-joins the reached
-    * set, so its frontier empties naturally at fixpoint; the backward
-    * accumulation then walks the levels actually discovered. Exact
-    * (sampled-pivot when `sources` is a sample) Brandes on arbitrary
-    * topology; throws past `roundCap`. */
-  def betweennessBrandesFixpoint(und: DataFrame, sources: DataFrame,
-      roundCap: Int = 64): DataFrame =
-    brandesImpl(und, sources, roundCap, probe = true)
-
-  private def brandesImpl(und: DataFrame, sources: DataFrame, depthCap: Int,
-      probe: Boolean): DataFrame = {
+  def betweennessBrandes(und: DataFrame, sources: DataFrame, stop: Stop): DataFrame = {
     val e = cut(und.select("src", "dst"))
     // forward: (source, key, dist, sigma)
-    var reached = sources.select(col("key").as("source"), col("key"),
+    val start = sources.select(col("key").as("source"), col("key"),
       lit(0).as("dist"), lit(1L).as("sigma"))
-    var frontier = reached
-    var maxDepth = depthCap
-    var i = 0
-    var expanding = true
-    while (expanding) {
-      i += 1
-      if (i > depthCap) {
-        if (probe) throw new IllegalStateException(
-          s"betweenness forward BFS exceeded $depthCap levels — graph depth over the safety cap")
-        expanding = false
-      } else {
-        // reached is re-read by both passes — cut lineage periodically but
-        // let short traversals stay one fused plan.
-        val expand = chk(frontier.join(e, col("key") === col("src"))
+    val (reached, _, rounds) = Superstep.run(stop, (start, start, 0)) {
+      case ((reached, frontier, _), i) =>
+        val expand = cut(frontier.join(e, col("key") === col("src"))
           .groupBy(col("source"), col("dst"))
           .agg(sum("sigma").as("sigma"))
           .join(reached.select(col("source"), col("key").as("dst")), Seq("source", "dst"), "left_anti")
-          .select(col("source"), col("dst").as("key"), lit(i).as("dist"), col("sigma")),
-          i, depthCap, 3)
-        reached = reached.union(expand)
-        frontier = expand
-        if (probe && frontier.limit(1).count() == 0) {
-          maxDepth = i - 1 // deepest level that actually holds nodes
-          expanding = false
-        }
-      }
-    }
+          .select(col("source"), col("dst").as("key"), lit(i).as("dist"), col("sigma")))
+        (reached.union(expand), expand, i)
+    } { case (_, (_, expand, _)) => expand.count() == 0 }
+    // a fixpoint ends on the first empty level: the deepest level that
+    // holds nodes is the one before it
+    val maxDepth = stop match { case Fixpoint(_) => rounds - 1; case _ => rounds }
     // backward: delta per (source, key), deepest level = 0.0, then each
     // level pulls (σ_v/σ_w)(1+δ_w) from its successors one ring out.
     // Level 0 is the sources themselves — δ_s(s) never counts, skip it.
-    var delta = reached.filter(col("dist") === maxDepth).withColumn("delta", lit(0.0))
-    for (lvl <- maxDepth - 1 to 1 by -1) {
+    val deepest = reached.filter(col("dist") === maxDepth).withColumn("delta", lit(0.0))
+    val delta = Superstep.rounds(maxDepth - 1, deepest) { (delta, i) =>
+      val lvl = maxDepth - i
       val upper = delta.filter(col("dist") === lvl + 1)
         .select(col("source"), col("key").as("dst"), col("sigma").as("sigw"), col("delta").as("dw"))
       val level = reached.filter(col("dist") === lvl)
@@ -855,11 +712,9 @@ object Algorithms {
         .join(upper, Seq("source", "dst"))
         .groupBy("source", "key")
         .agg(sum((col("sigma").cast("double") / col("sigw")) * (lit(1.0) + col("dw"))).as("dsum"))
-      val levelDelta = chk(level.join(contrib, Seq("source", "key"), "left")
+      delta.union(cut(level.join(contrib, Seq("source", "key"), "left")
         .select(col("source"), col("key"), col("dist"), col("sigma"),
-          coalesce(col("dsum"), lit(0.0)).as("delta")),
-        maxDepth - lvl, maxDepth - 1, 4)
-      delta = delta.union(levelDelta)
+          coalesce(col("dsum"), lit(0.0)).as("delta"))))
     }
     delta.filter(col("key") =!= col("source"))
       .groupBy("key").agg(sum("delta").as("betweenness"))
@@ -900,21 +755,18 @@ object Algorithms {
     // loop-invariant frames materialize once (see [[bfs]])
     val e = cut(edges.select("src", "dst", "w"))
     val hp = cut(h.select("key", "h"))
-    var dist = edges.sparkSession.range(1).select(lit(source).as("key"), lit(0.0).as("cost"))
-    for (i <- 1 to iters) {
+    val start = edges.sparkSession.range(1).select(lit(source).as("key"), lit(0.0).as("cost"))
+    Superstep.rounds(iters, start) { (dist, _) =>
       val bound = dist.filter(col("key") === target).agg(min("cost").as("bound"))
       val relaxed = dist.join(e, col("key") === col("src"))
         .select(col("dst").as("key"), (col("cost") + col("w")).as("cost"))
-      // dist is referenced 3× per round (bound, relax, union) → cut every 2.
-      dist = chk(dist.union(relaxed).groupBy("key").agg(min("cost").as("cost"))
+      cut(dist.union(relaxed).groupBy("key").agg(min("cost").as("cost"))
         .join(hp, Seq("key"), "left")
         .crossJoin(bound)
         .filter(col("bound").isNull ||
           (col("cost") + coalesce(col("h"), lit(0.0))) <= col("bound"))
-        .select("key", "cost"),
-        i, iters, 2)
+        .select("key", "cost"))
     }
-    dist
   }
 
   /** Biconnected components, Tarjan–Vishkin style (the sequential
@@ -935,141 +787,85 @@ object Algorithms {
     * Returns (src, dst, bicomp) for each undirected edge (src < dst),
     * bicomp = min edge id in its component.
     *
-    * `maxDepth` bounds the BFS forest; `climbRounds` (default = maxDepth)
-    * bounds the LCA climb separately — pass less when every cycle's
-    * endpoints sit within a known depth of their LCA. A non-tree edge
-    * with an endpoint outside the forest never joins the climb state and
-    * stays a singleton component — correct exactly when no cycle crosses
-    * the forest horizon, so maxDepth may also stop at the deepest cycle
-    * level rather than the graph's full depth.
+    * The defaults run on an arbitrary graph (the statement path, where
+    * the overlay may hold cycles at any depth or whole components
+    * detached from the bundled topology): roots are each component's min
+    * key (one [[connectedComponentsFixpoint]] pass), the forest grows
+    * until its frontier is empty, the climb runs until every non-tree
+    * edge's endpoints meet, and the auxiliary CC is
+    * [[connectedComponentsFixpoint]] — each throwing past its cap,
+    * matching the reference's run-to-completion DFS
+    * (`graph_engine/src/algorithms/biconnected.rs:112-280`).
+    *
+    * The gate path passes `roots` and [[Superstep.Rounds]] bounds
+    * (deterministic, oracle-unrollable); a [[Superstep.Rounds]] `cc`
+    * runs plain [[connectedComponents]]. A non-tree edge with an endpoint
+    * outside a bounded forest never joins the climb state and stays a
+    * singleton component — correct exactly when no cycle crosses the
+    * forest horizon, so the forest may stop at the deepest cycle level
+    * rather than the graph's full depth, and the climb at the largest
+    * endpoint-to-LCA distance.
     */
-  def biconnectedComponents(und: DataFrame, roots: DataFrame, maxDepth: Int, ccIters: Int,
-      climbRounds: Int = -1): DataFrame = {
-    val climb = if (climbRounds >= 0) climbRounds else maxDepth
+  def biconnectedComponents(und: DataFrame, roots: Option[DataFrame] = None,
+      forest: Stop = Fixpoint(), climb: Stop = Fixpoint(), cc: Stop = Fixpoint()): DataFrame = {
     val e = cut(und.select("src", "dst")) // loop-invariant (see [[bfs]])
+    def components(u: DataFrame, n: DataFrame) = cc match {
+      case Rounds(_) => connectedComponents(u, n, cc)
+      case _ => connectedComponentsFixpoint(u, n, cc)
+    }
+    // self-roots: the component label IS the min node key — a valid,
+    // deterministic root for every component
+    val rootKeys = roots.getOrElse(cut(
+      components(e, e.select(col("src").as("key")).distinct())
+        .select(col("component").as("key")).distinct()))
     // BFS forest: (key, parent, depth). Roots are their own parents.
-    var tree = roots.select(col("key"), col("key").as("parent"), lit(0).as("depth"))
-    var frontier = tree
-    for (i <- 1 to maxDepth) {
-      val next = frontier.join(e, col("key") === col("src"))
+    val tree0 = rootKeys.select(col("key"), col("key").as("parent"), lit(0).as("depth"))
+    val (tree, _) = Superstep.run(forest, (tree0, tree0)) { case ((tree, frontier), i) =>
+      val next = cut(frontier.join(e, col("key") === col("src"))
         .groupBy(col("dst")).agg(min(col("key")).as("parent")) // deterministic parent: min neighbor
         .join(tree.select(col("key").as("dst")), Seq("dst"), "left_anti")
-        .select(col("dst").as("key"), col("parent"), lit(i).as("depth"))
-        .transform(cut)
-      tree = tree.union(next)
-      frontier = next
-    }
-    biconnectedFromForest(e, tree, climb, probeClimb = false,
-      (auxUnd, auxNodes) => connectedComponents(auxUnd, auxNodes, ccIters))
-  }
-
-  /** [[biconnectedComponents]] run to FIXPOINT on an arbitrary graph —
-    * the statement-path variant, where the overlay may hold cycles at any
-    * depth or whole components detached from the bundled topology, so no
-    * fixed (depth, climb, cc) bound is justifiable. Self-roots: one
-    * checked CC pass over the full graph yields per-component min-key
-    * roots, so every component (region-attached or not) enters the BFS
-    * forest; the forest grows frontier-driven until exhausted, the LCA
-    * climb runs until every non-tree edge's endpoints meet, and the
-    * auxiliary-graph CC is [[connectedComponentsFixpoint]]. Each loop
-    * carries a `roundCap` safety throw — wrong-answer-silently is not an
-    * exit path here, matching the reference's run-to-completion DFS
-    * (`graph_engine/src/algorithms/biconnected.rs:112-280`).
-    */
-  def biconnectedComponentsFixpoint(und: DataFrame, roundCap: Int = 64): DataFrame = {
-    val e = cut(und.select("src", "dst").distinct())
-    val nodes = e.select(col("src").as("key")).distinct()
-    val cc = connectedComponentsFixpoint(e, nodes)
-    // component label IS the min node key — a valid, deterministic root
-    val roots = cc.select(col("component").as("key")).distinct()
-    var tree = roots.select(col("key"), col("key").as("parent"), lit(0).as("depth"))
-      .transform(cut)
-    var frontier = tree
-    var depth = 0
-    var alive = frontier.limit(1).count() > 0
-    while (alive) {
-      depth += 1
-      if (depth > roundCap) throw new IllegalStateException(
-        s"biconnected BFS forest exceeded $roundCap levels — graph depth over the safety cap")
-      val next = frontier.join(e, col("key") === col("src"))
-        .groupBy(col("dst")).agg(min(col("key")).as("parent"))
-        .join(tree.select(col("key").as("dst")), Seq("dst"), "left_anti")
-        .select(col("dst").as("key"), col("parent"), lit(depth).as("depth"))
-        .transform(cut)
-      tree = tree.union(next)
-      frontier = next
-      alive = frontier.limit(1).count() > 0
-    }
-    biconnectedFromForest(e, tree, roundCap, probeClimb = true,
-      connectedComponentsFixpoint(_, _))
-  }
-
-  /** Shared tail of the biconnected labeling: non-tree edge extraction,
-    * the LCA climb emitting (cycle id, tree-edge id) links, and CC over
-    * the edge-auxiliary graph. `probeClimb` = false runs exactly
-    * `climbCap` fixed rounds (gate path — deterministic, oracle-
-    * unrollable); true runs until no live pair remains, throwing at
-    * `climbCap` (statement path — arbitrary topology).
-    */
-  private def biconnectedFromForest(e: DataFrame, tree: DataFrame, climbCap: Int,
-      probeClimb: Boolean, ccRun: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+        .select(col("dst").as("key"), col("parent"), lit(i).as("depth")))
+      (tree.union(next), next)
+    } { case (_, (_, next)) => next.count() == 0 }
     // tree is read ~6 more times below (edge ids + two parent joins per
     // climb round) — one cut here pays for itself.
-    val treeCut = tree.transform(cut)
+    val treeCut = cut(tree)
     val eid = (a: Column, b: Column) => concat(least(a, b), lit("|"), greatest(a, b))
     val treeEdgeIds = treeCut.filter(col("depth") > 0).select(eid(col("key"), col("parent")).as("id"))
     // canonical undirected edges + their ids
-    val edgesC = e.filter(col("src") < col("dst")).distinct()
-      .select(col("src"), col("dst"), eid(col("src"), col("dst")).as("id"))
-      .transform(cut)
+    val edgesC = cut(e.filter(col("src") < col("dst")).distinct()
+      .select(col("src"), col("dst"), eid(col("src"), col("dst")).as("id")))
     val nonTree = edgesC.join(treeEdgeIds, Seq("id"), "left_anti")
     // climb both endpoints of each non-tree edge to the LCA, emitting the
     // tree edges on the way: state (cid, a, da, b, db), the deeper side
     // steps to its parent each round (both step on a tie).
     val pa = treeCut.select(col("key"), col("parent"), col("depth"))
-    var state = nonTree
+    val state0 = cut(nonTree
       .join(pa.select(col("key").as("src"), col("depth").as("da")), Seq("src"))
       .join(pa.select(col("key").as("dst"), col("depth").as("db")), Seq("dst"))
-      .select(col("id").as("cid"), col("src").as("a"), col("da"), col("dst").as("b"), col("db"))
-      .transform(cut)
-    var links = state.limit(0).select(col("cid"), col("cid").as("tid")) // (cycle id, tree-edge id)
-    var round = 0
-    var climbing = true
-    while (climbing) {
-      round += 1
-      if (round > climbCap) {
-        if (probeClimb) throw new IllegalStateException(
-          s"biconnected LCA climb did not converge within $climbCap rounds — " +
-            "cycle depth over the safety cap")
-        climbing = false
-      } else {
-        val live = state.filter(col("a") =!= col("b"))
-        val stepA = col("da") >= col("db") // deeper (or tied) a-side steps
-        val stepB = col("db") >= col("da")
-        val stepped = live
-          .join(pa.select(col("key").as("a"), col("parent").as("pa2"), col("depth").as("da2")), Seq("a"))
-          .join(pa.select(col("key").as("b"), col("parent").as("pb2"), col("depth").as("db2")), Seq("b"))
-        links = links
+      .select(col("id").as("cid"), col("src").as("a"), col("da"), col("dst").as("b"), col("db")))
+    val links0 = state0.limit(0).select(col("cid"), col("cid").as("tid")) // (cycle id, tree-edge id)
+    val (_, links) = Superstep.run(climb, (state0, links0)) { case ((state, links), _) =>
+      val stepA = col("da") >= col("db") // deeper (or tied) a-side steps
+      val stepB = col("db") >= col("da")
+      val stepped = state.filter(col("a") =!= col("b"))
+        .join(pa.select(col("key").as("a"), col("parent").as("pa2"), col("depth").as("da2")), Seq("a"))
+        .join(pa.select(col("key").as("b"), col("parent").as("pb2"), col("depth").as("db2")), Seq("b"))
+      (cut(stepped.select(col("cid"),
+          when(stepA, col("pa2")).otherwise(col("a")).as("a"),
+          when(stepA, col("da2") - 1).otherwise(col("da")).as("da"),
+          when(stepB, col("pb2")).otherwise(col("b")).as("b"),
+          when(stepB, col("db2") - 1).otherwise(col("db")).as("db"))),
+        links
           .union(stepped.filter(stepA).select(col("cid"), eid(col("a"), col("pa2")).as("tid")))
-          .union(stepped.filter(stepB).select(col("cid"), eid(col("b"), col("pb2")).as("tid")))
-        state = stepped.select(col("cid"),
-            when(stepA, col("pa2")).otherwise(col("a")).as("a"),
-            when(stepA, col("da2") - 1).otherwise(col("da")).as("da"),
-            when(stepB, col("pb2")).otherwise(col("b")).as("b"),
-            when(stepB, col("db2") - 1).otherwise(col("db")).as("db"))
-          .transform(cut)
-        // probe path exits as soon as every endpoint pair has met; the
-        // fixed path runs its exact round budget (oracle-unrollable).
-        if (probeClimb) climbing = state.filter(col("a") =!= col("b")).limit(1).count() > 0
-      }
-    }
+          .union(stepped.filter(stepB).select(col("cid"), eid(col("b"), col("pb2")).as("tid"))))
+    } { case (_, (state, _)) => state.filter(col("a") =!= col("b")).count() == 0 }
     // edge-auxiliary graph: every edge id is a node; a cycle's non-tree id
     // links to each tree edge id on it. Min-label CC over it.
     val auxEdges = links.select(col("cid").as("src"), col("tid").as("dst"))
     val auxUnd = auxEdges.union(auxEdges.select(col("dst").as("src"), col("src").as("dst")))
-    val auxNodes = edgesC.select(col("id").as("key"))
-    val cc = ccRun(auxUnd, auxNodes)
-    edgesC.join(cc, edgesC("id") === cc("key"))
+    val comp = components(auxUnd, edgesC.select(col("id").as("key")))
+    edgesC.join(comp, edgesC("id") === comp("key"))
       .select(col("src"), col("dst"), col("component").as("bicomp"))
   }
 
@@ -1094,26 +890,15 @@ object Algorithms {
     val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
     val contrib = cut(edges.join(outDeg, "src").select("src", "dst", "od"))
     val keys = cut(nodes.select(col("key")))
-    var pr = keys.select(col("key"), lit(1.0).as("pr"))
-    var i = 1
-    var converged = false
-    while (i <= iters && !converged) {
-      val prev = pr
+    val stop = if (tolerance > 0) UpTo(iters) else Rounds(iters)
+    Superstep.run(stop, keys.select(col("key"), lit(1.0).as("pr"))) { (pr, _) =>
       val mass = pr.join(contrib, col("key") === col("src"))
         .select(col("dst"), (col("pr") / col("od")).as("m"))
         .groupBy("dst").agg(sum("m").as("mass"))
-      pr = chk(keys
+      cut(keys
         .join(mass, col("key") === col("dst"), "left")
-        .select(col("key"), (lit(1 - damping) + lit(damping) * coalesce(col("mass"), lit(0.0))).as("pr")),
-        i, iters)
-      if (tolerance > 0) {
-        val d = pr.join(prev.select(col("key"), col("pr").as("prv")), Seq("key"))
-          .agg(max(abs(col("pr") - col("prv"))).as("d")).collect()(0).getDouble(0)
-        converged = d < tolerance
-      }
-      i += 1
-    }
-    pr
+        .select(col("key"), (lit(1 - damping) + lit(damping) * coalesce(col("mass"), lit(0.0))).as("pr")))
+    } { (prev, pr) => maxChange(prev, pr, "pr") < tolerance }
   }
 
   /** Personalized PageRank (random walk with restart; Jeh & Widom): the
@@ -1138,16 +923,13 @@ object Algorithms {
     // contrib is loop-invariant — materialize once (see [[pageRank]])
     val deg = edges.groupBy("src").agg(count(lit(1)).as("od"))
     val contrib = cut(edges.join(deg, "src").select("src", "dst", "od"))
-    var pr = seedT.select(col("key"), col("t").as("pr"))
-    for (i <- 1 to iters) {
+    Superstep.rounds(iters, seedT.select(col("key"), col("t").as("pr"))) { (pr, _) =>
       val mass = pr.join(contrib, col("key") === col("src"))
         .select(col("dst"), (col("pr") / col("od")).as("m"))
         .groupBy("dst").agg(sum("m").as("mass"))
-      pr = chk(mass.select(col("dst").as("key"), (lit(damping) * col("mass")).as("pr"))
+      cut(mass.select(col("dst").as("key"), (lit(damping) * col("mass")).as("pr"))
         .union(seedT.select(col("key"), (lit(1 - damping) * col("t")).as("pr")))
-        .groupBy("key").agg(sum("pr").as("pr")),
-        i, iters)
+        .groupBy("key").agg(sum("pr").as("pr")))
     }
-    pr
   }
 }

@@ -2,7 +2,8 @@ package graft.nql
 
 import graft.Tables
 import graft.functions.VectorFunctions._
-import graft.graph.{Algorithms, GraphXAdapters, TpchGraph}
+import graft.graph.{Algorithms, GraphXAdapters, Superstep, TpchGraph}
+import graft.graph.Superstep.{cut, Fixpoint, Rounds, UpTo}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -105,32 +106,31 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     * undirected closure of `edges`, tracking a deterministic min-key
     * parent per node, then backtracking `to → from` into an ordered
     * (hop, key) list. The BFS is the same keyed-shuffle-per-round shape
-    * as every other iterative loop here; the backtrack is ONE composed
-    * job of ≤ maxDepth broadcast point-lookup self-joins against the
-    * MATERIALIZED tree frame (plus a single one-row collect for the
-    * target's depth) — bounded by the depth cap, never by data size.
+    * as every other iterative loop here, ending early once the target is
+    * reached or the frontier is empty (one probe action per round); the
+    * backtrack is ONE composed job of ≤ maxDepth broadcast point-lookup
+    * self-joins against the MATERIALIZED tree frame (plus a single
+    * one-row collect for the target's depth) — bounded by the depth cap,
+    * never by data size.
     * Unreachable targets return an empty frame (reference returns zero
     * path items). */
   private def findPathBfs(edges: DataFrame, from: String, to: String,
       maxDepth: Int = 6): DataFrame = {
     import spark.implicits._
     val und = TpchGraph.undirected(edges).select("src", "dst")
-    var tree = Algorithms.cut(
-      Seq((from, from, 0)).toDF("key", "parent", "depth"))
-    var found = from == to
-    var i = 1
-    var frontierAlive = true
-    while (!found && frontierAlive && i <= maxDepth) {
+    val start = cut(Seq((from, from, 0)).toDF("key", "parent", "depth"))
+    // state: (tree, target found, frontier non-empty)
+    val (tree, found, _) = Superstep.run(UpTo(if (from == to) 0 else maxDepth),
+        (start, from == to, true)) { case ((tree, _, _), i) =>
       val frontier = tree.filter(col("depth") === i - 1).select(col("key").as("src"))
       val nxt = und.join(frontier, Seq("src"))
         .join(tree.select(col("key").as("dst")), Seq("dst"), "left_anti")
         .groupBy("dst").agg(min("src").as("parent"))
         .select(col("dst").as("key"), col("parent"), lit(i).as("depth"))
-      tree = Algorithms.cut(tree.union(nxt))
-      found = tree.filter(col("key") === to).limit(1).count() > 0
-      frontierAlive = tree.filter(col("depth") === i).limit(1).count() > 0
-      i += 1
-    }
+      val next = cut(tree.union(nxt))
+      val probe = next.agg(max((col("key") === to).cast("int")), max(col("depth"))).first()
+      (next, probe.getInt(0) == 1, probe.getInt(1) == i)
+    } { case (_, (_, found, alive)) => found || !alive }
     if (!found) return Seq.empty[(Int, String)].toDF("hop", "key")
     // Backtrack to → from as ONE composed job: the parent chain is d
     // bounded self-joins against the materialized tree (each a broadcast
@@ -170,12 +170,11 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     * detached from the bundled topology), so it runs the FIXPOINT variant:
     * per-component min-key roots, frontier-exhausted BFS forest, LCA climb
     * to convergence, checked CC — no topology-derived round constants.
-    * The fixed-bound [[Algorithms.biconnectedComponents]] stays on the
-    * memoized gate artifact only (GraphQueries g25/g26/g45, whose bounds
-    * carry an SF-invariance proof for the bundled graph). */
+    * Fixed bounds stay on the memoized gate artifact only (GraphQueries
+    * g25/g26/g45, whose bounds carry an SF-invariance proof for the
+    * bundled graph). */
   private def biconnectedEdges(): DataFrame =
-    Algorithms.biconnectedComponentsFixpoint(
-      TpchGraph.undirected(allEdges).select("src", "dst"))
+    Algorithms.biconnectedComponents(TpchGraph.undirected(allEdges).select("src", "dst"))
 
   def compile(st: Statement): DataFrame = st match {
     case SqlPassthrough(sql) =>
@@ -350,7 +349,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     // PATH statements walk the overlay graph (like NEIGHBORS / FIND PATH);
     // MAX is a user knob, so the bound is the caller's contract.
     case PathShortest(from, to, maxDepth) =>
-      Algorithms.bfs(TpchGraph.undirected(allEdges), from, maxDepth)
+      Algorithms.bfs(TpchGraph.undirected(allEdges), Algorithms.source(spark, from), Rounds(maxDepth))
         .filter(col("key") === to)
         .select(lit(from).as("from"), col("key").as("to"), col("depth"))
 
@@ -603,10 +602,11 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     // Deterministic tie-breaks on key.
     case GraphDiameter() =>
       val und = TpchGraph.undirected(allEdges)
-      val start = allNodes.orderBy("key").limit(1).select("key")
-      val far1 = Algorithms.bfsFromFixpoint(und, start)
-        .orderBy(desc("depth"), col("key")).limit(1).select("key")
-      Algorithms.bfsFromFixpoint(und, far1)
+      // seeds are cut: every round's anti-join re-reads them
+      val start = cut(allNodes.orderBy("key").limit(1).select("key"))
+      val far1 = cut(Algorithms.bfs(und, start, Fixpoint())
+        .orderBy(desc("depth"), col("key")).limit(1).select("key"))
+      Algorithms.bfs(und, far1, Fixpoint())
         .orderBy(desc("depth"), col("key")).limit(1)
         .select(col("key").as("peripheral_key"),
           col("depth").as("pseudo_diameter"))
@@ -637,9 +637,9 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
           // hub-layer sources (the g22 construction), but the BFS runs to
           // fixpoint: every shortest path from a hub counts, whatever its
           // length — a fixed horizon silently zeroes deep overlay paths
-          Algorithms.betweennessBrandesFixpoint(
+          Algorithms.betweennessBrandes(
               bwEdges,
-              allNodes.filter(col("label").isin("nation", "region")).select("key"))
+              allNodes.filter(col("label").isin("nation", "region")).select("key"), Fixpoint())
             .select(col("key"), round(col("betweenness"), 6).as("betweenness"))
             .orderBy(desc("betweenness"), col("key")).limit(20)
         case Some(pct) =>
@@ -650,10 +650,10 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
           // rule as the SAMPLE statement.
           val n = allNodes.count()
           val k = math.ceil(n * pct / 100.0).toLong
-          val sources = Algorithms.cut(allNodes.select("key")
+          val sources = cut(allNodes.select("key")
             .orderBy(md5(col("key")), col("key")).limit(k.toInt))
           val scale = n.toDouble / k
-          Algorithms.betweennessBrandesFixpoint(bwEdges, sources)
+          Algorithms.betweennessBrandes(bwEdges, sources, Fixpoint())
             .select(col("key"), round(col("betweenness") * scale, 6).as("betweenness"))
             .orderBy(desc("betweenness"), col("key")).limit(20)
       }
@@ -674,8 +674,8 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       // user selected, however deep the overlay makes it (on the base
       // in_region default the slice is 5 disjoint stars — the fixpoint
       // exhausts at depth 2, so base results are unchanged)
-      Algorithms.closenessFixpoint(walked,
-          walked.select(col("src").as("key")).distinct())
+      Algorithms.closeness(walked,
+          cut(walked.select(col("src").as("key")).distinct()), Fixpoint())
         .orderBy(desc("closeness"), col("key")).limit(30)
 
     case GraphLabelProp(iters, etype, direction) =>
@@ -1227,7 +1227,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     // filters apply once to the edge frame before the loop, so the
     // per-round plan is the unfiltered BFS's (filters ride the scan).
     case Traverse(from, depth, etype, label) =>
-      Algorithms.bfs(TpchGraph.undirected(allEdges), from, depth,
+      Algorithms.bfs(TpchGraph.undirected(allEdges), Algorithms.source(spark, from), Rounds(depth),
           edgePred = etype.map(t => col("etype") === t),
           allowedNodes = label.map(l =>
             allNodes.filter(col("label") === l).select("key")))
@@ -1441,7 +1441,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       for (h <- 2 to ep.maxHops) {
         hop = hop.select(col("f"), col("t").as("mid"))
           .join(base.select(col("f").as("mid"), col("t")), Seq("mid"))
-          .select("f", "t").distinct().transform(Algorithms.cut)
+          .select("f", "t").distinct().transform(cut)
         if (h >= ep.minHops) acc = if (acc == null) hop else acc.union(hop)
       }
       acc.distinct()

@@ -37,7 +37,7 @@ object PipelineQueries {
   private val shinglesMemo =
     graft.Memo.artifact[(SparkSession, String), DataFrame]()
   private def shingles(s: SparkSession, d: String): DataFrame =
-    shinglesMemo.getOrElseUpdate((s, d), graft.graph.Algorithms.cut(
+    shinglesMemo.getOrElseUpdate((s, d), graft.graph.Superstep.cut(
       docs(s, d).select(col("doc_id"), split(col("text"), "\\s+").as("ws"))
         .filter(size(col("ws")) >= 3)
         .select(col("doc_id"), explode(expr(
@@ -107,7 +107,7 @@ object PipelineQueries {
   private def sharedSetPairs(s: SparkSession, d: String): (DataFrame, DataFrame) =
     setPairsMemo.getOrElseUpdate((s, d), {
       val (scored, memb) = wordJaccardSetPairsPath(s, d, forceBitmask = None)
-      (graft.graph.Algorithms.cut(scored), memb)
+      (graft.graph.Superstep.cut(scored), memb)
     })
 
   /** Path-forcing entry for the differential spec (D03PathsSpec): both
@@ -218,7 +218,7 @@ object PipelineQueries {
     * its output. */
   private[graft] def wordJaccardSetPairsPath(s: SparkSession, d: String,
       forceBitmask: Option[Boolean]): (DataFrame, DataFrame) = {
-    val sets = graft.graph.Algorithms.cut(
+    val sets = graft.graph.Superstep.cut(
       words(s, d).groupBy("doc_id").agg(
           first(col("source")).as("source"),
           sort_array(collect_set(col("w"))).as("wa"))
@@ -241,7 +241,7 @@ object PipelineQueries {
     // ~25 s. (reps cut ALONE is catastrophic — 198 s — the cut flips the
     // verify joins' broadcast decision while the expensive window still
     // recomputes; always pair it with the ranked cut.)
-    val reps = graft.graph.Algorithms.cut(sets.groupBy("source", "sig")
+    val reps = graft.graph.Superstep.cut(sets.groupBy("source", "sig")
       .agg(first(col("wa")).as("wa"), first(col("n")).as("n")))
     // Dictionary-encodable small-domain fast path: when the corpus
     // vocabulary fits 64 bits, each distinct word set is one BIGINT
@@ -273,7 +273,7 @@ object PipelineQueries {
     // the token explode + df join + window re-run once per side (and
     // transitively re-aggregate reps); the dominant cost of the composed
     // plan in the sf1.0 A/B (PERF.md round 10)
-    val ranked = graft.graph.Algorithms.cut(tok.join(dfq, Seq("w"))
+    val ranked = graft.graph.Superstep.cut(tok.join(dfq, Seq("w"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("source", "sig").orderBy(col("df"), col("w"))))
       .select(col("source"), col("sig"), col("n"), col("w"), col("rk")))
@@ -320,7 +320,7 @@ object PipelineQueries {
     require(dictRows.length <= 64,
       s"bitmask path requires vocabulary <= 64, got ${dictRows.length}")
     val dict = s.createDataFrame(dictRows.toSeq.zipWithIndex).toDF("w", "bit")
-    val bm = graft.graph.Algorithms.cut(
+    val bm = graft.graph.Superstep.cut(
       reps.select(col("source"), col("sig"), col("n"), explode(col("wa")).as("w"))
         .join(broadcast(dict), Seq("w"))
         .groupBy("source", "sig", "n")
@@ -353,7 +353,7 @@ object PipelineQueries {
     graft.Memo.artifact[(SparkSession, String), DataFrame]()
   private def sharedJaccardPairs(s: SparkSession, d: String): DataFrame =
     pairsMemo.getOrElseUpdate((s, d),
-      graft.graph.Algorithms.cut(
+      graft.graph.Superstep.cut(
         wordJaccardPairs(s, d).select("da", "db", "jaccard")))
 
   /** DuckDB CTE prelude producing the same ≥0.8 pair set as
@@ -400,7 +400,7 @@ object PipelineQueries {
       val minAggs = hashAB.zipWithIndex.map { case ((a, b), i) =>
         min(expr(s"($a * v + $b) % $P")).as(s"mh$i")
       }
-      graft.graph.Algorithms.cut(
+      graft.graph.Superstep.cut(
         withV.groupBy("doc_id").agg(minAggs.head, minAggs.tail: _*))
     })
 
@@ -412,7 +412,7 @@ object PipelineQueries {
         val cols = (4 * b until 4 * b + 4).map(i => s"cast(mh$i as string)").mkString(", ")
         s"md5(cast(concat_ws(',', $cols) as binary)) AS bh$b"
       }
-      graft.graph.Algorithms.cut(minhashSigs(s, d).selectExpr("doc_id" +: bandExprs: _*)
+      graft.graph.Superstep.cut(minhashSigs(s, d).selectExpr("doc_id" +: bandExprs: _*)
         .selectExpr("doc_id", "stack(4, 0, bh0, 1, bh1, 2, bh2, 3, bh3) AS (band, bh)"))
     })
 
@@ -540,7 +540,7 @@ object PipelineQueries {
         .orderBy(desc("wfreq"), col("pair")).limit(1)
         .withColumn("merged", expr("replace(pair, ' ', '')"))
       merges += top1.select(lit(r).as("r"), col("pair"), col("merged"), col("wfreq"))
-      seqs = graft.graph.Algorithms.cut(
+      seqs = graft.graph.Superstep.cut(
         seqs.crossJoin(broadcast(top1.select(col("pair").as("_p"), col("merged").as("_m"))))
           .withColumn("seq", expr(
             "replace(seq, concat(' ', replace(_p, ' ', '  '), ' '), concat(' ', _m, ' '))"))
@@ -708,23 +708,24 @@ object PipelineQueries {
         val minNb = edges.select(col("src").as("key"), col("dst").as("nb"))
           .union(edges.select(col("dst").as("key"), col("src").as("nb")))
           .groupBy("key").agg(min("nb").as("mn"))
-        val lab1 = graft.graph.Algorithms.cut(
+        val lab1 = graft.graph.Superstep.cut(
           nodes.join(minNb, Seq("key"), "left")
             .select(col("key"), least(col("key"), coalesce(col("mn"), col("key"))).as("l1")))
-        val cEdges = graft.graph.Algorithms.cut(edges
+        val cEdges = graft.graph.Superstep.cut(edges
           .join(lab1.select(col("key").as("src"), col("l1").as("ls")), Seq("src"))
           .join(lab1.select(col("key").as("dst"), col("l1").as("ld")), Seq("dst"))
           .select(col("ls").as("src"), col("ld").as("dst"))
           .filter(col("src") =!= col("dst")).distinct())
         val cNodes = lab1.select(col("l1").as("key")).distinct()
         val cUnd = cEdges.union(cEdges.select(col("dst").as("src"), col("src").as("dst")))
-        // Checked variant: "8 >= planted diameter" is VERIFIED by a
+        // Fixpoint with cap 8: "8 >= planted diameter" is VERIFIED by a
         // convergence probe (one extra round must change nothing), not
         // asserted in a comment — a split cluster would otherwise match
         // the identically-unrolled oracle and pass the gate undetected.
         // (Contractions only shorten paths: the contracted-graph diameter
         // is ≤ the doc-graph diameter the oracle unrolls.)
-        val cc1 = graft.graph.Algorithms.connectedComponentsChecked(cUnd, cNodes, 8)
+        val cc1 = graft.graph.Algorithms.connectedComponents(cUnd, cNodes,
+          graft.graph.Superstep.Fixpoint(8))
         val cc = lab1
           .join(cc1.withColumnRenamed("key", "l1"), Seq("l1"))
           .select(col("key"), col("component"))

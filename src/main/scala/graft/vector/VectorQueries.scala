@@ -51,7 +51,7 @@ object VectorQueries {
     val e = emb(s, d).select(col("vec_id"), col("embedding"))
     val q0 = emb(s, d).filter(col("vec_id") === qid)
       .select(col("embedding").as("qvec"))
-    val pool = graft.graph.Algorithms.cut(
+    val pool = graft.graph.Superstep.cut(
       e.filter(col("vec_id") =!= qid).crossJoin(broadcast(q0))
         .select(col("vec_id"), col("embedding"),
           cosine_similarity(col("embedding"), col("qvec")).as("rel"))
@@ -70,7 +70,7 @@ object VectorQueries {
         .withColumn("mmr", lit(0.7) * col("rel") - lit(0.3) * col("msim"))
         .orderBy(desc("mmr"), col("vec_id")).limit(1)
       picks += pick.select(lit(r).as("r"), col("vec_id"), col("mmr"))
-      sel = graft.graph.Algorithms.cut(sel.union(
+      sel = graft.graph.Superstep.cut(sel.union(
         pool.join(pick.select("vec_id"), Seq("vec_id"))
           .select(col("vec_id").as("sid"), col("embedding").as("sv"))))
     }
@@ -752,7 +752,7 @@ object VectorQueries {
             .groupBy("vec_id").agg(min("dd").as("mind"))
             .orderBy(desc("mind"), col("vec_id")).limit(1)
           picks += pick.select(lit(r).as("r"), col("vec_id"), col("mind"))
-          sel = graft.graph.Algorithms.cut(sel.union(
+          sel = graft.graph.Superstep.cut(sel.union(
             e.join(pick.select("vec_id"), Seq("vec_id"))
               .select(col("vec_id").as("sid"), col("embedding").as("sv"))))
         }

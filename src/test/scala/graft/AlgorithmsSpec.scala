@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph.Algorithms
+import graft.graph.Superstep.{Fixpoint, Rounds}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +22,7 @@ class AlgorithmsSpec extends AnyFunSuite {
   test("Brandes on a path graph: bc(inner) = 4 with all sources (2x unordered pairs)") {
     val g = und("a" -> "b", "b" -> "c", "c" -> "d")
     val sources = Seq("a", "b", "c", "d").toDF("key")
-    val bc = Algorithms.betweennessBrandes(g, sources, 3)
+    val bc = Algorithms.betweennessBrandes(g, sources, Rounds(3))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(bc("b") == 4.0 && bc("c") == 4.0)
     assert(bc("a") == 0.0 && bc("d") == 0.0)
@@ -32,7 +33,7 @@ class AlgorithmsSpec extends AnyFunSuite {
     // per direction → bc = 1.0 over all four sources.
     val g = und("a" -> "b", "a" -> "c", "b" -> "d", "c" -> "d")
     val sources = Seq("a", "b", "c", "d").toDF("key")
-    val bc = Algorithms.betweennessBrandes(g, sources, 2)
+    val bc = Algorithms.betweennessBrandes(g, sources, Rounds(2))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(bc("b") == 1.0 && bc("c") == 1.0)
     assert(bc("a") == 1.0 && bc("d") == 1.0) // a,d relay b↔c paths (σ=2 each way)
@@ -44,7 +45,7 @@ class AlgorithmsSpec extends AnyFunSuite {
     // points are c (joins the triangles) and e (triangle + bridge).
     val g = und("a" -> "b", "b" -> "c", "a" -> "c", "c" -> "d", "d" -> "e", "c" -> "e", "e" -> "f")
     val roots = Seq("a").toDF("key")
-    val bc = Algorithms.biconnectedComponents(g, roots, 4, 6)
+    val bc = Algorithms.biconnectedComponents(g, Some(roots), Rounds(4), Rounds(4), Rounds(6))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
     assert(bc.size == 7)
     val t1 = Set(("a", "b"), ("b", "c"), ("a", "c")).map(bc)
@@ -54,7 +55,7 @@ class AlgorithmsSpec extends AnyFunSuite {
     assert(t1 != t2, "distinct triangles merged")
     assert(!t1.contains(bc(("e", "f"))) && !t2.contains(bc(("e", "f"))), "bridge absorbed")
     // articulation points = nodes incident to >= 2 components
-    val arts = Algorithms.biconnectedComponents(g, roots, 4, 6)
+    val arts = Algorithms.biconnectedComponents(g, Some(roots), Rounds(4), Rounds(4), Rounds(6))
       .select(explode(array(col("src"), col("dst"))).as("key"), col("bicomp"))
       .groupBy("key").agg(countDistinct("bicomp").as("nc"))
       .filter(col("nc") >= 2).collect().map(_.getString(0)).toSet
@@ -112,13 +113,13 @@ class AlgorithmsSpec extends AnyFunSuite {
     assert(sm <= se && se < s0, s"expected manhattan <= euclidean < zero, got $sm/$se/$s0")
   }
 
-  test("connectedComponentsChecked fails loudly below the graph diameter") {
+  test("connectedComponents under a Fixpoint cap fails loudly below the graph diameter") {
     // path a0-a1-...-a9: min-label propagation needs 9 rounds to reach a9
     val g = und((0 until 9).map(i => s"a$i" -> s"a${i + 1}"): _*)
     val nodes = (0 to 9).map(i => s"a$i").toDF("key")
     assertThrows[IllegalStateException](
-      Algorithms.connectedComponentsChecked(g, nodes, 3))
-    val ok = Algorithms.connectedComponentsChecked(g, nodes, 9)
+      Algorithms.connectedComponents(g, nodes, Fixpoint(3)))
+    val ok = Algorithms.connectedComponents(g, nodes, Fixpoint(9))
     assert(ok.select("component").distinct().count() == 1)
   }
 
@@ -127,16 +128,17 @@ class AlgorithmsSpec extends AnyFunSuite {
     // without c stops the frontier at b (c never entered).
     val e = Seq(("a", "b", "t1"), ("b", "c", "t1"), ("a", "d", "t2"))
       .toDF("src", "dst", "etype")
-    val all = Algorithms.bfs(e, "a", 3).collect().map(_.getString(0)).toSet
+    val a = Algorithms.source(spark, "a")
+    val all = Algorithms.bfs(e, a, Rounds(3)).collect().map(_.getString(0)).toSet
     assert(all == Set("a", "b", "c", "d"))
-    val t1Only = Algorithms.bfs(e, "a", 3, edgePred = Some(col("etype") === "t1"))
+    val t1Only = Algorithms.bfs(e, a, Rounds(3), edgePred = Some(col("etype") === "t1"))
       .collect().map(_.getString(0)).toSet
     assert(t1Only == Set("a", "b", "c"))
     val allowed = Seq("a", "b", "d").toDF("key")
-    val noC = Algorithms.bfs(e, "a", 3, allowedNodes = Some(allowed))
+    val noC = Algorithms.bfs(e, a, Rounds(3), allowedNodes = Some(allowed))
       .collect().map(_.getString(0)).toSet
     assert(noC == Set("a", "b", "d"))
-    val both = Algorithms.bfs(e, "a", 3, edgePred = Some(col("etype") === "t1"),
+    val both = Algorithms.bfs(e, a, Rounds(3), edgePred = Some(col("etype") === "t1"),
       allowedNodes = Some(allowed)).collect().map(_.getString(0)).toSet
     assert(both == Set("a", "b"))
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph.Algorithms
+import graft.graph.Superstep.Rounds
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,7 +66,8 @@ class BiconnectedPropertySpec extends AnyFunSuite {
       val undSym = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
       val roots = Seq("v0").toDF("key")
 
-      val bc = Algorithms.biconnectedComponents(undSym, roots, n, n + 2)
+      val bc = Algorithms.biconnectedComponents(undSym, Some(roots),
+        forest = Rounds(n), climb = Rounds(n), cc = Rounds(n + 2))
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
       assert(bc.size == edges.size, s"trial $trial: edge count mismatch")
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph.{Algorithms, GraphXAdapters, TpchGraph}
+import graft.graph.Superstep.Rounds
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +17,7 @@ class GraphXAdaptersSpec extends AnyFunSuite {
   test("GraphX connected components partition nodes identically to the DF impl") {
     val gx = GraphXAdapters.connectedComponents(nodes, edges)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
-    val df = Algorithms.connectedComponents(edges, nodes, 6)
+    val df = Algorithms.connectedComponents(edges, nodes, Rounds(6))
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     assert(gx.keySet == df.keySet)
     // same partition = same groups, even if the representative differs

@@ -917,7 +917,8 @@ class NqlSpec extends AnyFunSuite {
     val got = run("TRAVERSE FROM 'region:0' DEPTH 3")
       .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
     val want = graft.graph.Algorithms.bfs(
-        graft.graph.TpchGraph.undirected(graft.graph.TpchGraph.edges(spark, sf)), "region:0", 3)
+        graft.graph.TpchGraph.undirected(graft.graph.TpchGraph.edges(spark, sf)),
+        graft.graph.Algorithms.source(spark, "region:0"), graft.graph.Superstep.Rounds(3))
       .orderBy("key").collect().map(r => (r.getString(0), r.getInt(1))).toSeq
     assert(got == want && got.nonEmpty)
     // TYPE filter: from nation:0, in_region edges only reach the region

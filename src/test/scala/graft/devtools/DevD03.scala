@@ -28,7 +28,7 @@ object DevD03 {
       .filter(col("w") =!= "")
     time("words")(words.count())
 
-    val sets = graft.graph.Algorithms.cut(
+    val sets = graft.graph.Superstep.cut(
       words.groupBy("doc_id").agg(
           first(col("source")).as("source"),
           sort_array(collect_set(col("w"))).as("wa"))
@@ -46,8 +46,8 @@ object DevD03 {
       .withColumn("rk", row_number().over(
         Window.partitionBy("source", "sig").orderBy(col("df"), col("w"))))
       .select(col("source"), col("sig"), col("n"), col("w"), col("rk"))
-    val probe = graft.graph.Algorithms.cut(ranked.filter((col("rk") - 1) * 5 <= col("n")))
-    val mid = graft.graph.Algorithms.cut(ranked.filter(expr("rk - 1 <= n - ((8 * n + 8) DIV 9)")))
+    val probe = graft.graph.Superstep.cut(ranked.filter((col("rk") - 1) * 5 <= col("n")))
+    val mid = graft.graph.Superstep.cut(ranked.filter(expr("rk - 1 <= n - ((8 * n + 8) DIV 9)")))
     time("probe prefix")(probe.count())
     time("mid prefix")(mid.count())
 
@@ -64,10 +64,10 @@ object DevD03 {
       .filter((lit(1) + least(col("na") - col("rka"), col("nb") - col("rkb"))) * 9 >=
         (col("na") + col("nb")) * 4)
     time("cand rows post-positional")(candPos.count())
-    val cand = graft.graph.Algorithms.cut(candPos.select("source", "siga", "sigb").distinct())
+    val cand = graft.graph.Superstep.cut(candPos.select("source", "siga", "sigb").distinct())
     time("cand distinct pairs")(cand.count())
 
-    val scored = graft.graph.Algorithms.cut(cand
+    val scored = graft.graph.Superstep.cut(cand
       .join(reps.select(col("source"), col("sig").as("siga"),
         col("wa").as("waa"), col("n").as("na")), Seq("source", "siga"))
       .join(reps.select(col("source"), col("sig").as("sigb"),
@@ -97,7 +97,7 @@ object DevD03 {
 
     // ---- composed-plan variants (what the bench actually times) ------
     def composed(cutReps: Boolean, cutRanked: Boolean, cutCand: Boolean): org.apache.spark.sql.DataFrame = {
-      val sets2 = graft.graph.Algorithms.cut(
+      val sets2 = graft.graph.Superstep.cut(
         words.groupBy("doc_id").agg(
             first(col("source")).as("source"),
             sort_array(collect_set(col("w"))).as("wa"))
@@ -106,14 +106,14 @@ object DevD03 {
       val memb2 = sets2.select("doc_id", "source", "sig")
       val reps0 = sets2.groupBy("source", "sig")
         .agg(first(col("wa")).as("wa"), first(col("n")).as("n"))
-      val reps2 = if (cutReps) graft.graph.Algorithms.cut(reps0) else reps0
+      val reps2 = if (cutReps) graft.graph.Superstep.cut(reps0) else reps0
       val tok2 = reps2.select(col("source"), col("sig"), col("n"), explode(col("wa")).as("w"))
       val dfq2 = tok2.groupBy("w").agg(count(lit(1)).as("df"))
       val ranked0 = tok2.join(dfq2, Seq("w"))
         .withColumn("rk", row_number().over(
           Window.partitionBy("source", "sig").orderBy(col("df"), col("w"))))
         .select(col("source"), col("sig"), col("n"), col("w"), col("rk"))
-      val ranked2 = if (cutRanked) graft.graph.Algorithms.cut(ranked0) else ranked0
+      val ranked2 = if (cutRanked) graft.graph.Superstep.cut(ranked0) else ranked0
       val probe2 = ranked2.filter((col("rk") - 1) * 5 <= col("n"))
       val mid2 = ranked2.filter(expr("rk - 1 <= n - ((8 * n + 8) DIV 9)"))
       val cand0 = probe2.select(col("source"), col("sig").as("siga"), col("n").as("na"),
@@ -127,7 +127,7 @@ object DevD03 {
         .filter((lit(1) + least(col("na") - col("rka"), col("nb") - col("rkb"))) * 9 >=
           (col("na") + col("nb")) * 4)
         .select("source", "siga", "sigb").distinct()
-      val cand2 = if (cutCand) graft.graph.Algorithms.cut(cand0) else cand0
+      val cand2 = if (cutCand) graft.graph.Superstep.cut(cand0) else cand0
       val scored2 = cand2
         .join(reps2.select(col("source"), col("sig").as("siga"),
           col("wa").as("waa"), col("n").as("na")), Seq("source", "siga"))
@@ -150,13 +150,13 @@ object DevD03 {
         .select(col("da"), col("db"), lit(1.0).as("jaccard"))
       cross2.unionByName(ident2)
     }
-    time("composed cut ranked only")(graft.graph.Algorithms.cut(
+    time("composed cut ranked only")(graft.graph.Superstep.cut(
       composed(cutReps = false, cutRanked = true, cutCand = false)).count())
-    time("composed cut reps+ranked")(graft.graph.Algorithms.cut(
+    time("composed cut reps+ranked")(graft.graph.Superstep.cut(
       composed(cutReps = true, cutRanked = true, cutCand = false)).count())
-    time("composed cut ranked only #2")(graft.graph.Algorithms.cut(
+    time("composed cut ranked only #2")(graft.graph.Superstep.cut(
       composed(cutReps = false, cutRanked = true, cutCand = false)).count())
-    time("composed cut reps+ranked #2")(graft.graph.Algorithms.cut(
+    time("composed cut reps+ranked #2")(graft.graph.Superstep.cut(
       composed(cutReps = true, cutRanked = true, cutCand = false)).count())
     spark.stop()
   }
