@@ -38,6 +38,61 @@ package graft
 object Bench {
   private val FailPenaltySec = 999.0
 
+  /** The capture window is 2000 bytes (BENCH_r11/12 tails). */
+  private[graft] val TailBudget = 1950
+
+  /** Precision ladders for the final line, most precise first: decimals
+    * for values (below 1, below 10, from 10). The coarsest rung prints
+    * whole seconds, so 180 queries with 10 failures still fit. */
+  private val Ladders = Seq((3, 3, 3), (3, 2, 1), (2, 2, 1), (2, 1, 1), (1, 1, 1), (1, 1, 0),
+    (1, 0, 0), (0, 0, 0))
+
+  private def fmt3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** `q01_agg_pricing_summary` -> `q01`: unique by construction (asserted). */
+  private[graft] def shortKeys(names: Seq[String]): Map[String, String] = {
+    val m = names.map(n => n -> n.takeWhile(_ != '_')).toMap
+    require(m.values.toSet.size == names.distinct.size, "short bench keys collide")
+    m
+  }
+
+  /** The FINAL stdout line. The harness that captures this process keeps
+    * only the LAST ~2000 bytes of stdout and parses the LAST JSON line
+    * from it. Round 12's final line was a total-only JSON (it always fit),
+    * but that left the driver's artifact with NO per-query medians. So
+    * the final line is a COMPLETE JSON with the full "queries" map (short
+    * keys, -1 for a failed query, which is also listed in "failed"),
+    * rendered at the most precise ladder rung that keeps the whole line
+    * within [[TailBudget]]. Worst case (nothing fits) falls back to the
+    * total-only line rather than emitting a truncated head. */
+  private[graft] def finalLine(results: Seq[(String, Double)], runs: Int, sfDir: String): String = {
+    val shortKey = shortKeys(results.map(_._1))
+    val total = results.map { case (_, v) => if (v < 0) FailPenaltySec else v }.sum
+    val nFailed = results.count(_._2 < 0)
+    // %.{dp}f with trailing zeros (and a bare trailing '.') trimmed —
+    // "0.70" -> "0.7", "4.00" -> "4"; still valid JSON numbers.
+    def trim(v: Double, dp: Int): String = {
+      val s = String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
+      if (!s.contains('.')) s
+      else s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
+    }
+    val head = s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","runs":$runs,""" +
+      s""""n":${results.size},"n_failed":$nFailed,"sf":"$sfDir""""
+    def rung(ladder: (Int, Int, Int)): String = {
+      val (d1, d10, dBig) = ladder
+      val fmtA = (v: Double) =>
+        if (v < 0) "-1"
+        else trim(v, if (v < 1) d1 else if (v < 10) d10 else dBig)
+      val qs = results.map { case (k, v) => "\"" + shortKey(k) + "\":" + fmtA(v) }
+        .mkString("{", ",", "}")
+      val failed = if (nFailed == 0) ""
+        else results.collect { case (k, v) if v < 0 => "\"" + shortKey(k) + "\"" }
+          .mkString(""","failed":[""", ",", "]")
+      s"""$head,"queries":$qs$failed}"""
+    }
+    Ladders.iterator.map(rung).find(_.length <= TailBudget).getOrElse(head + "}")
+  }
+
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.size
@@ -115,7 +170,6 @@ object Bench {
     }
 
     // Full-resolution artifact (medians + raw draws) for the repo.
-    val fmt3 = (v: Double) => String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     locally {
       val meds = results.map { case (k, v) => "\"" + k + "\":" + fmt3(v) }.mkString("{", ",", "}")
       val raw = byName.map { case (k, ds) =>
@@ -132,9 +186,7 @@ object Bench {
       println(s"# raw draws written to $rawOut")
     }
 
-    // `q01_agg_pricing_summary` -> `q01`: unique by construction (asserted).
-    val shortKey = results.map { case (n, _) => n -> n.takeWhile(_ != '_') }.toMap
-    require(shortKey.values.toSet.size == results.size, "short bench keys collide")
+    val shortKey = shortKeys(results.map(_._1))
 
     def line(keyOf: String => String, fmt: Double => String): String = {
       val qs = results.map { case (k, v) => "\"" + keyOf(k) + "\":" + fmt(v) }
@@ -147,44 +199,7 @@ object Bench {
     println(line(identity, _.toString))            // full names, for humans
     // Locale.ROOT: a comma-decimal default locale must not break the JSON
     println(line(shortKey, fmt3))                  // compact, for tools/humans
-    // The harness that captures this process keeps only the LAST ~2000
-    // bytes of stdout and parses the LAST JSON line from it. Round 12's
-    // final line was a total-only JSON (it always fit), but that left the
-    // driver's artifact with NO per-query medians (PERF_r12.per_query was
-    // empty and now_bench_ok=false — the per-query dict lines above were
-    // head-truncated). Fixed this round, timing methodology unchanged: the
-    // FINAL line is a COMPLETE JSON with the full "queries" map, rendered
-    // at the highest uniform precision ladder that keeps the whole line
-    // within the capture window. Worst case (nothing fits) falls back to
-    // the old total-only line rather than emitting a truncated head.
-    val total = results.map { case (_, v) => if (v < 0) FailPenaltySec else v }.sum
-    val nFailed = results.count(_._2 < 0)
-    val tailBudget = 1950 // capture window is 2000 bytes (BENCH_r11/12 tails)
-    // %.{dp}f with trailing zeros (and a bare trailing '.') trimmed —
-    // "0.70" -> "0.7", "4.00" -> "4"; still valid JSON numbers.
-    def trim(v: Double, dp: Int): String = {
-      val s = String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
-      if (!s.contains('.')) s
-      else s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
-    }
-    // Precision ladders, most precise first: (below1, below10, above10) dp.
-    val ladders = Seq((3, 3, 3), (3, 2, 1), (2, 2, 1), (2, 1, 1), (1, 1, 1))
-    def finalLine(ladder: (Int, Int, Int)): String = {
-      val (d1, d10, dBig) = ladder
-      val fmtA = (v: Double) =>
-        if (v < 0) "-1"
-        else trim(v, if (v < 1) d1 else if (v < 10) d10 else dBig)
-      val qs = results.map { case (k, v) => "\"" + shortKey(k) + "\":" + fmtA(v) }
-        .mkString("{", ",", "}")
-      val failed = if (nFailed == 0) ""
-        else results.collect { case (k, v) if v < 0 => "\"" + shortKey(k) + "\"" }
-          .mkString(""","failed":[""", ",", "]")
-      s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","runs":$runs,""" +
-        s""""n":${results.size},"n_failed":$nFailed,"sf":"$sfDir","queries":$qs$failed}"""
-    }
-    val fitting = ladders.iterator.map(finalLine).find(_.length <= tailBudget)
-    println(fitting.getOrElse(
-      s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","runs":$runs,"n":${results.size},"n_failed":$nFailed,"sf":"$sfDir"}"""))
+    println(finalLine(results, runs, sfDir))
     spark.stop()
   }
 }

@@ -24,8 +24,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     * EntityStore (when configured).
     */
   private def isVecKey(k: String) = k.startsWith("vec:")
-  private def isGraphKey(k: String) =
-    Seq("region:", "nation:", "customer:", "supplier:").exists(k.startsWith)
+  private def isGraphKey(k: String) = NqlCompiler.BaseKeyPrefixes.exists(k.startsWith)
   private def storeOrFail(op: String): graft.unified.EntityStore =
     store.getOrElse(throw NqlParseException(
       s"$op requires a writable entity store (configure a store dir)"))
@@ -62,38 +61,71 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     * pattern, no base rewrite). Store tombstones mask base rows too, so
     * NODE DELETE of a base key (or of a previously-overlaid base key)
     * deletes the node instead of resurrecting the base row.
+    *
+    * `keys` and `label` restrict the view. They apply to both sides
+    * before the union and the anti-join (the mask takes only the key
+    * restriction: a store row under any label hides its base row), and
+    * the base side is left out when no base row can match — a key without
+    * a base prefix, a label other than the four base labels. A point read
+    * of a store key then touches only the store view.
     */
-  private def allNodes: DataFrame = {
-    val base = TpchGraph.nodes(spark, sfDir)
+  private def nodesWhere(keys: Option[Seq[String]] = None, label: Option[String] = None): DataFrame = {
+    def byKey(df: DataFrame) = keys.fold(df)(ks => df.filter(col("key").isin(ks: _*)))
+    def byLabel(df: DataFrame) = label.fold(df)(l => df.filter(col("label") === l))
+    def base = byLabel(byKey(NqlCompiler.baseGraph(spark, sfDir).nodes))
     store match {
       case None => base
       case Some(st) =>
-        val overlay = st.entities.select(col("key"),
+        val rec = byKey(st.entityRecords)
+        val overlay = byLabel(rec.filter(!col("deleted")).select(col("key"),
           coalesce(element_at(col("props"), "label"), lit("entity")).as("label"),
-          coalesce(element_at(col("props"), "name"), col("key")).as("name"))
-        val masked = overlay.select("key").union(st.deletedKeys)
-        overlay.union(base.join(masked, Seq("key"), "left_anti"))
+          coalesce(element_at(col("props"), "name"), col("key")).as("name")))
+        if (keys.exists(!_.exists(isGraphKey)) || label.exists(l => !NqlCompiler.BaseLabels(l))) overlay
+        else overlay.union(base.join(rec.select("key"), Seq("key"), "left_anti"))
     }
   }
 
+  private def allNodes: DataFrame = nodesWhere()
+
   /** Edge view: derived base edges plus store-created edges; edge
-    * tombstones mask base edges of the same (src, dst, etype) identity. */
-  private def allEdges: DataFrame = {
-    val base = TpchGraph.edges(spark, sfDir)
+    * tombstones mask base edges of the same (src, dst, etype) identity.
+    * `touching` (an endpoint key) and `etype` restrict both sides like
+    * [[nodesWhere]]'s predicates, and prune the base side when it cannot
+    * hold a match. */
+  private def edgesWhere(touching: Option[String] = None, etype: Option[String] = None): DataFrame = {
+    def restrict(df: DataFrame) = {
+      val t = touching.fold(df)(k => df.filter(col("src") === k || col("dst") === k))
+      etype.fold(t)(e => t.filter(col("etype") === e))
+    }
+    def base = restrict(NqlCompiler.baseGraph(spark, sfDir).edges)
     store match {
       case None => base
       case Some(st) =>
-        base.join(st.deletedEdges, Seq("src", "dst", "etype"), "left_anti")
-          .union(st.edges.select("src", "dst", "etype"))
+        val rec = restrict(st.edgeRecords)
+        val live = rec.filter(!col("deleted")).select("src", "dst", "etype")
+        if (touching.exists(!isGraphKey(_)) || etype.exists(e => !NqlCompiler.BaseEdgeTypes(e))) live
+        else base.join(rec.filter(col("deleted")).select("src", "dst", "etype"),
+          Seq("src", "dst", "etype"), "left_anti").union(live)
     }
   }
+
+  private def allEdges: DataFrame = edgesWhere()
+
+  /** `(end, other, etype)` for both ends of every edge of `e`: the rows of
+    * `TpchGraph.undirected(e)` as `(src, dst, etype)`, from one scan of
+    * `e` instead of a union of two. */
+  private def endpoints(e: DataFrame): DataFrame =
+    e.select(explode(array(
+        struct(col("src").as("end"), col("dst").as("other")),
+        struct(col("dst").as("end"), col("src").as("other")))).as("p"), col("etype"))
+      .select(col("p.end").as("end"), col("p.other").as("other"), col("etype"))
 
   /** CREATE/MERGE one node into the store (merge = only if absent). */
   private def cypherPutNode(node: CypherParser.NodePat, merge: Boolean): DataFrame = {
     val key = node.props("key")
     val label = node.label.getOrElse("entity")
     val props = Map("label" -> label) ++ (node.props - "key")
-    if (merge && allNodes.filter(col("key") === key).limit(1).count() > 0)
+    if (merge && nodesWhere(keys = Some(Seq(key))).limit(1).count() > 0)
       status(key, "merge_matched")
     else {
       storeOrFail(if (merge) "MERGE" else "CREATE")
@@ -156,7 +188,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     * stored, IN reverses them, BOTH takes the symmetric closure. */
   private def orientedEdges(etype: Option[String], direction: Option[String],
       defaultDir: String): DataFrame = {
-    val f = etype.fold(allEdges)(t => allEdges.filter(col("etype") === t))
+    val f = edgesWhere(etype = etype)
     direction.getOrElse(defaultDir) match {
       case "out" => f
       case "in" => f.select(col("dst").as("src"), col("src").as("dst"), col("etype"))
@@ -334,16 +366,16 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       limit.fold(filtered)(filtered.limit)
 
     case Neighbors(key, None, etype, limit, dir) =>
+      val touching = edgesWhere(touching = Some(key), etype = etype)
       val e = dir match {
-        case "out" => allEdges.filter(col("src") === key)
+        case "out" => touching.filter(col("src") === key)
           .select(col("dst").as("neighbor"), col("etype"))
-        case "in" => allEdges.filter(col("dst") === key)
+        case "in" => touching.filter(col("dst") === key)
           .select(col("src").as("neighbor"), col("etype"))
-        case _ => TpchGraph.undirected(allEdges).filter(col("src") === key)
-          .select(col("dst").as("neighbor"), col("etype"))
+        case _ => endpoints(touching).filter(col("end") === key)
+          .select(col("other").as("neighbor"), col("etype"))
       }
-      val filtered = etype.fold(e)(t => e.filter(col("etype") === t))
-      val out = filtered.orderBy("neighbor")
+      val out = e.orderBy("neighbor")
       limit.fold(out)(out.limit)
 
     // PATH statements walk the overlay graph (like NEIGHBORS / FIND PATH);
@@ -362,7 +394,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
         .select(lit(from).as("from"), col("key").as("to"), round(col("cost"), 4).as("cost"))
 
     case NodeGet(key) =>
-      allNodes.filter(col("key") === key)
+      nodesWhere(keys = Some(Seq(key)))
 
     case NodeList(label, limit, offset) =>
       val n = allNodes
@@ -404,9 +436,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       val st = storeOrFail("BATCH UPDATE NODES")
       st.withMergeLock { // read-merge-append: serialize vs other merges
         val keys = items.map(_._1)
-        val current = st.entities.filter(col("key").isin(keys: _*))
-          .select("key", "props", "embedding").collect()
-          .map(r => r.getAs[String]("key") -> r).toMap
+        val current = st.lookup(keys)
         val missing = keys.filterNot(current.contains)
         if (missing.nonEmpty) throw NqlExecException(
           s"BATCH UPDATE NODES: node(s) ${missing.sorted.mkString(", ")} do not exist")
@@ -440,9 +470,9 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       limit.fold(off)(off.limit)
 
     case Degree(key) =>
-      TpchGraph.undirected(allEdges)
-        .filter(col("src") === key)
-        .groupBy(col("src").as("key")).agg(count(lit(1)).as("degree"))
+      endpoints(edgesWhere(touching = Some(key)))
+        .filter(col("end") === key)
+        .groupBy(col("end").as("key")).agg(count(lit(1)).as("degree"))
 
     case GraphPageRank(iters, engine, damping, tolerance, etype, direction) =>
       if (engine == "graphx" && (damping != 0.85 || tolerance != 0.0 ||
@@ -459,7 +489,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       val prEdges = (etype, direction) match {
         case (None, None) => treeSlice
         case _ =>
-          val f = etype.fold(allEdges)(t => allEdges.filter(col("etype") === t))
+          val f = edgesWhere(etype = etype)
           direction.getOrElse("out") match {
             case "out" => f
             case "in" => f.select(col("dst").as("src"), col("src").as("dst"), col("etype"))
@@ -499,7 +529,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       // the no-overlay whole-graph default reads the memoized canonical
       // frame shared with g38/g47/g51 — a live store's mutable edge view
       // must canonicalize itself.
-      def slice = etype.fold(allEdges)(t => allEdges.filter(col("etype") === t))
+      def slice = edgesWhere(etype = etype)
         .select(least(col("src"), col("dst")).as("src"),
           greatest(col("src"), col("dst")).as("dst"))
         .filter(col("src") < col("dst")).distinct()
@@ -586,7 +616,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     // (overlay-aware: walks the same node/edge frames as NEIGHBORS).
     // An unknown seed yields an empty result, matching WALK's behavior.
     case GraphPpr(from, iters) =>
-      val seeds = allNodes.filter(col("key") === from).select("key")
+      val seeds = nodesWhere(keys = Some(Seq(from))).select("key")
       Algorithms.personalizedPageRank(
           TpchGraph.undirected(allEdges), allNodes, seeds, iters)
         .filter(col("pr") > 0)
@@ -625,7 +655,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       // traversed edge set: default = undirected overlay closure; with
       // EDGE TYPE / direction, the reference's filtered/oriented form
       val bwEdges = {
-        val f = etype.fold(allEdges)(t => allEdges.filter(col("etype") === t))
+        val f = edgesWhere(etype = etype)
         direction.getOrElse("both") match {
           case "out" => f
           case "in" => f.select(col("dst").as("src"), col("src").as("dst"), col("etype"))
@@ -663,7 +693,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     case GraphCloseness(etype, direction) =>
       // default keeps the g18 nation/region in_region-tree form; EDGE
       // TYPE / direction select the reference's filtered/oriented set
-      val e = allEdges.filter(col("etype") === etype.getOrElse("in_region"))
+      val e = edgesWhere(etype = Some(etype.getOrElse("in_region")))
       val walked = direction.getOrElse("both") match {
         case "out" => e.select("src", "dst")
         case "in" => e.select(col("dst").as("src"), col("src").as("dst"))
@@ -735,10 +765,10 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       if (isVecKey(key)) throw NqlExecException(
         "EMBED DELETE: bundled 'vec:*' embeddings are read-only driver data")
       val st = storeOrFail("EMBED DELETE")
-      val cur = st.entities.filter(col("key") === key).limit(1).collect()
-      if (cur.isEmpty || cur.head.isNullAt(cur.head.fieldIndex("embedding")))
-        throw NqlExecException(s"EMBED DELETE: no embedding stored under '$key'")
-      val props = Option(cur.head.getAs[Map[String, String]]("props"))
+      val cur = st.lookup(Seq(key)).get(key)
+        .filterNot(r => r.isNullAt(r.fieldIndex("embedding")))
+        .getOrElse(throw NqlExecException(s"EMBED DELETE: no embedding stored under '$key'"))
+      val props = Option(cur.getAs[Map[String, String]]("props"))
         .getOrElse(Map.empty[String, String])
       if (props.nonEmpty)
         st.put(Seq(graft.unified.EntityStore.EntityRow(key, props, None)))
@@ -767,7 +797,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     // over the overlay-aware frame — fixed schema columns plus any
     // store-entity props carried by that label.
     case DescribeNode(label) =>
-      val n = allNodes.filter(col("label") === label)
+      val n = nodesWhere(label = Some(label))
       val base = n.agg(count("key").as("key"), count("label").as("label"),
           count("name").as("name"))
         .selectExpr("stack(3, 'key', key, 'label', label, 'name', name) AS (property, n_present)")
@@ -780,7 +810,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       base.union(storeProps).orderBy("property")
 
     case DescribeEdge(etype) =>
-      allEdges.filter(col("etype") === etype)
+      edgesWhere(etype = Some(etype))
         .agg(count("src").as("src"), count("dst").as("dst"), count("etype").as("etype"))
         .selectExpr("stack(3, 'src', src, 'dst', dst, 'etype', etype) AS (property, n_present)")
         .orderBy("property")
@@ -826,7 +856,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       val c = NqlCompiler.constraintDefs.getOrElse((spark, sfDir, name),
         throw NqlExecException(s"CONSTRAINT CHECK: no constraint named '$name' (CONSTRAINT CREATE it first)"))
       if (c.onEdges) {
-        val e = c.filter.fold(allEdges)(t => allEdges.filter(col("etype") === t))
+        val e = edgesWhere(etype = c.filter)
         if (!e.columns.contains(c.property)) throw NqlExecException(
           s"CONSTRAINT CHECK: edges carry no property '${c.property}'")
         c.ctype match {
@@ -841,7 +871,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       } else {
         // node property resolution: fixed schema columns from the
         // overlay node view; anything else from the store's props map
-        val base = c.filter.fold(allNodes)(l => allNodes.filter(col("label") === l))
+        val base = nodesWhere(label = c.filter)
         val withV =
           if (Seq("key", "label", "name").contains(c.property))
             base.withColumn("__v", col(c.property))
@@ -896,10 +926,8 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       // merge on the same key cannot interleave between the lookup and
       // the put, so neither statement's assignments are lost
       st.withMergeLock {
-        val cur = st.entities.filter(col("key") === key).limit(1).collect()
-        if (cur.isEmpty) throw NqlExecException(
-          s"ENTITY UPDATE: entity '$key' does not exist (use ENTITY CREATE)")
-        val row = cur.head
+        val row = st.lookup(Seq(key)).getOrElse(key, throw NqlExecException(
+          s"ENTITY UPDATE: entity '$key' does not exist (use ENTITY CREATE)"))
         val curProps = Option(row.getAs[Map[String, String]]("props")).getOrElse(Map.empty)
         val curEmb = Option(row.getAs[scala.collection.Seq[Float]]("embedding")).map(_.toArray)
         // EMBEDDING clause replaces the vector; without it the old one stays
@@ -930,8 +958,8 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       // embedding replaced. One bounded 1-key lookup per statement.
       val st = storeOrFail("EMBED STORE")
       st.withMergeLock { // read-merge-append: serialize vs other merges
-        val existing = st.entities.filter(col("key") === key).limit(1).collect()
-          .headOption.flatMap(r => Option(r.getAs[Map[String, String]]("props")))
+        val existing = st.lookup(Seq(key)).get(key)
+          .flatMap(r => Option(r.getAs[Map[String, String]]("props")))
           .getOrElse(Map.empty[String, String])
         st.put(Seq(graft.unified.EntityStore.EntityRow(
           key, existing ++ collection.map("collection" -> _).toMap, Some(vector))))
@@ -955,10 +983,8 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       // lookup for all keys (the item list is statement-literal-sized).
       val stb = storeOrFail("EMBED BATCH")
       val itemKeys = items.map(_._1)
-      val existingProps = stb.entities.filter(col("key").isin(itemKeys: _*))
-        .select("key", "props").collect()
-        .map(r => r.getString(0) -> Option(r.getAs[Map[String, String]]("props"))
-          .getOrElse(Map.empty[String, String])).toMap
+      val existingProps = stb.lookup(itemKeys).map { case (k, r) =>
+        k -> Option(r.getAs[Map[String, String]]("props")).getOrElse(Map.empty[String, String]) }
       stb.put(items.map { case (k, v) =>
         graft.unified.EntityStore.EntityRow(
           k, existingProps.getOrElse(k, Map.empty) ++ collection.map("collection" -> _).toMap,
@@ -1022,11 +1048,11 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     // 1430-1487`; `graph_engine/src/lib.rs:5705-5829`) — overlay-aware
     // via allNodes/allEdges, one map-side-combined count.
     case GraphCountNodes(label) =>
-      label.fold(allNodes)(l => allNodes.filter(col("label") === l))
+      nodesWhere(label = label)
         .agg(count(lit(1)).as("n_nodes"))
 
     case GraphCountEdges(etype) =>
-      etype.fold(allEdges)(t => allEdges.filter(col("etype") === t))
+      edgesWhere(etype = etype)
         .agg(count(lit(1)).as("n_edges"))
 
     // Property aggregation over nodes/edges (reference
@@ -1038,7 +1064,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
         if (overEdges) {
           if (prop != "weight") throw NqlParseException(
             s"unknown edge property '$prop' (available: weight)")
-          filter.fold(allEdges)(t => allEdges.filter(col("etype") === t))
+          edgesWhere(etype = filter)
             .withColumn("value", expr(
               "CASE etype WHEN 'in_region' THEN 2.0 WHEN 'in_nation' THEN 1.0 ELSE 1.5 END"))
         } else {
@@ -1087,7 +1113,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       // a keyed point lookup, not a scan-collect.
       val endpoints = Seq(r.from, r.to)
       val keys = endpoints.map(_.props("key"))
-      val existing = allNodes.filter(col("key").isin(keys: _*))
+      val existing = nodesWhere(keys = Some(keys))
         .select("key").collect().map(_.getString(0)).toSet
       // endpoints with a label or extra props are created (if absent) in
       // ONE batched put; bare `(x {key: '…'})` endpoints are references
@@ -1134,7 +1160,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     // same WHERE/RETURN/LIMIT tail as FIND ROWS. Deterministic key order
     // before LIMIT so pagination is stable.
     case FindNodes(label, where, ret, limit) =>
-      val n0 = label.fold(allNodes)(l => allNodes.filter(col("label") === l))
+      val n0 = nodesWhere(label = label)
       // WHERE/RETURN columns beyond the overlay schema (key/label/name)
       // are store properties (reference FindStmt property conditions):
       // resolve them through the props map with the same element_at join
@@ -1160,7 +1186,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       else lim.select(n0.columns.map(col): _*) // prop join columns are filter-only
 
     case FindEdges(etype, where, ret, limit) =>
-      val e0 = etype.fold(allEdges)(t => allEdges.filter(col("etype") === t))
+      val e0 = edgesWhere(etype = etype)
       val badCols = (where.map(_.column) ++ ret).distinct
         .filterNot(c => Set("src", "dst", "etype").contains(c.toLowerCase))
       if (badCols.nonEmpty) throw NqlExecException(
@@ -1175,7 +1201,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     // FROM+TO = BFS shortest path as a hop list; FROM only = outgoing
     // connections; TO only = incoming (reference default limit 100).
     case FindPath(fromOpt, via, toOpt, limit) =>
-      val e0 = via.fold(allEdges)(t => allEdges.filter(col("etype") === t))
+      val e0 = edgesWhere(etype = via)
       (fromOpt, toOpt) match {
         // LIMIT on the FROM+TO form bounds the path SEARCH depth (clamped
         // to 8 hops — each BFS round is a keyed shuffle): paths longer
@@ -1230,7 +1256,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       Algorithms.bfs(TpchGraph.undirected(allEdges), Algorithms.source(spark, from), Rounds(depth),
           edgePred = etype.map(t => col("etype") === t),
           allowedNodes = label.map(l =>
-            allNodes.filter(col("label") === l).select("key")))
+            nodesWhere(label = Some(l)).select("key")))
         .orderBy("key")
 
     // REBALANCE: the d08 equal-share budget mix as a statement. The
@@ -1272,7 +1298,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     // missing start key yields an empty result (the walk never begins),
     // matching NEIGHBORS' behavior for unknown keys.
     case Walk(from, steps) =>
-      val seeds = allNodes.filter(col("key") === from).select("key")
+      val seeds = nodesWhere(keys = Some(Seq(from))).select("key")
       Algorithms.hashGreedyWalk(TpchGraph.undirected(allEdges), seeds, steps)
         .select(col("walk_id"), col("cur").as("final_node"), col("path"))
 
@@ -1363,19 +1389,15 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       // streamed in batches.
       for ((v, assigns) <- m.set.groupBy(_._1).toSeq.sortBy(_._1)) {
         val setProps = assigns.map(a => (a._2, a._3)).toMap
-        val matched = filtered.select(col(s"${v}_key").as("key")).distinct()
-          .join(allNodes.select(col("key"), col("label").as("__label"),
-            col("name").as("__name")), Seq("key"), "left")
+        // the binding frame already carries each node's label and name
+        val matched = filtered.select(col(s"${v}_key").as("key"),
+          col(s"${v}_label").as("__label"), col(s"${v}_name").as("__name")).distinct()
         val it = matched.toLocalIterator()
         val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
         def flush(): Unit = if (buf.nonEmpty) {
           val batch = buf.toSeq; buf.clear()
           st.withMergeLock {
-            val pre = st.entities
-              .filter(col("key").isin(batch.map(_._1): _*))
-              .select(col("key"), col("props"), col("embedding"))
-              .collect() // bounded: <= DeleteBatchSize pre-image rows
-              .map(r => r.getAs[String]("key") -> r).toMap
+            val pre = st.lookup(batch.map(_._1)) // bounded: <= DeleteBatchSize rows
             st.put(batch.map { case (k, lbl, nm) =>
               pre.get(k) match {
                 case Some(r) =>
@@ -1418,24 +1440,21 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
   private def matchBindings(m: CypherParser.MatchStmt): DataFrame = {
     import CypherParser.{EdgePat, NodePat}
     // overlay-aware: Cypher reads (and MATCH…DELETE tombstones) the same
-    // store-overlaid graph the NODE/EDGE statements operate on
-    val nodes = allNodes
-    val edges = allEdges
-
+    // store-overlaid graph the NODE/EDGE statements operate on; a
+    // pattern's key and label restrict the node view itself
     def nodeDf(np: NodePat): DataFrame = {
-      var df = nodes
-      np.label.foreach(l => df = df.filter(col("label") === l))
-      np.props.foreach { case (k, v) => df = df.filter(col(k) === v) }
+      var df = nodesWhere(np.props.get("key").map(Seq(_)), np.label)
+      (np.props - "key").foreach { case (k, v) => df = df.filter(col(k) === v) }
       df.select(df.columns.map(c => col(c).as(s"${np.variable}_$c")): _*)
     }
 
     def hopPairs(ep: EdgePat): DataFrame = {
-      val oriented = ep.direction match {
-        case 1 => edges.select(col("src").as("f"), col("dst").as("t"), col("etype"))
-        case -1 => edges.select(col("dst").as("f"), col("src").as("t"), col("etype"))
-        case 0 => TpchGraph.undirected(edges).select(col("src").as("f"), col("dst").as("t"), col("etype"))
-      }
-      val base = ep.etype.fold(oriented)(t => oriented.filter(col("etype") === t)).select("f", "t")
+      val edges = edgesWhere(etype = ep.etype)
+      val base = (ep.direction match {
+        case 1 => edges.select(col("src").as("f"), col("dst").as("t"))
+        case -1 => edges.select(col("dst").as("f"), col("src").as("t"))
+        case 0 => TpchGraph.undirected(edges).select(col("src").as("f"), col("dst").as("t"))
+      })
       var hop = base
       var acc: DataFrame = if (ep.minHops <= 1) base else null
       for (h <- 2 to ep.maxHops) {
@@ -1469,7 +1488,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     // node filters are already applied inside the chain, so the right
     // side keeps only its join keys + newly-bound columns.
     var bound = m.nodes.map(_.variable).toSet
-    val nodeCols = nodes.columns
+    val nodeCols = Seq("key", "label", "name") // the node view's columns
     for ((ns, es) <- m.morePatterns) {
       val sub = chain(ns, es, nodeDf(ns.head))
       val shared = ns.map(_.variable).distinct.filter(bound.contains)
@@ -1551,6 +1570,26 @@ object NqlCompiler {
 
   /** Tombstone batch size for MATCH ... DELETE streaming. */
   private[nql] val DeleteBatchSize = 10000
+
+  /** The base graph frames the overlay reads, held per (session, data
+    * dir) so a statement does not rebuild them: building one reads its
+    * tables again, and each parquet read runs a schema-inference job.
+    * A plain class, not a Product: clearing the memo drops this handle
+    * but leaves the frames' Spark caches to [[TpchGraph]]. */
+  private[nql] final class BaseGraph(spark: SparkSession, sfDir: String) {
+    lazy val nodes: DataFrame = TpchGraph.nodes(spark, sfDir)
+    lazy val edges: DataFrame = TpchGraph.edges(spark, sfDir)
+  }
+  private val baseGraphs = graft.Memo.artifact[(SparkSession, String), BaseGraph]()
+  private[nql] def baseGraph(spark: SparkSession, sfDir: String): BaseGraph =
+    baseGraphs.getOrElseUpdate((spark, sfDir), new BaseGraph(spark, sfDir))
+
+  /** What the TPC-H-derived base graph can hold ([[TpchGraph]]): node
+    * key prefixes, node labels and edge types. A predicate outside these
+    * cannot match a base row. */
+  private val BaseKeyPrefixes = Seq("region:", "nation:", "customer:", "supplier:")
+  private val BaseLabels = Set("region", "nation", "customer", "supplier")
+  private val BaseEdgeTypes = Set("in_region", "in_nation", "same_region")
 }
 
 /** Front door: `Nql.execute(spark, sfDir, "SIMILAR 'vec:0' LIMIT 5")`. */
