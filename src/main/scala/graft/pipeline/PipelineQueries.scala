@@ -44,85 +44,43 @@ object PipelineQueries {
           "transform(sequence(0, size(ws)-3), j -> concat_ws(' ', ws[j], ws[j+1], ws[j+2]))")).as("sh"))
         .distinct()))
 
-  /** Exact shingle-set Jaccard for a given pair set (da < db): one
-    * array_intersect per pair against per-doc shingle arrays. The verify
-    * join is candidate-bound — |pairs| rows, each carrying two per-doc
-    * arrays — not token-occurrence-bound like the exploded
-    * per-shingle re-join it replaces (|pairs| × shingles-per-doc rows
-    * through two shuffles plus a pair-keyed re-aggregation; measured 42×
-    * wall on 10× corpus in d10 before the change). */
-  private def jaccardOf(pairs: DataFrame, sh: DataFrame): DataFrame = {
-    val arr = sh.groupBy("doc_id")
-      .agg(collect_list(col("sh")).as("xs"), count(lit(1)).as("n"))
-    pairs
-      .join(arr.select(col("doc_id").as("da"), col("xs").as("xa"), col("n").as("na")), Seq("da"))
-      .join(arr.select(col("doc_id").as("db"), col("xs").as("xb"), col("n").as("nb")), Seq("db"))
-      .withColumn("c", size(array_intersect(col("xa"), col("xb"))).cast("long"))
-      .withColumn("jaccard", col("c") / (col("na") + col("nb") - col("c")))
-      .drop("xa", "xb")
-  }
+  // Every similarity threshold of the pipeline, each stated once.
+  import SetSimilarity.{Containment, Jaccard}
+  private val NearDup = Jaccard(4, 5)          // d03/d07 word sets
+  private val MinhashVerify = Jaccard(3, 5)    // d04/d14 shingle sets
+  private val Subsumed = Containment(9, 10)    // d10 shingle sets
 
   /** Same-source word-set near-dup pairs with Jaccard ≥ 0.8 (da < db) —
-    * the candidate generation of d03, shared with d07's clustering.
-    * Classic distributed set-similarity join (the Vernica/Carey/Li
-    * MapReduce shape with the AllPairs/PPJoin prefix filter), in four
-    * stages — each lossless for j ≥ 0.8, so the output and the oracle
-    * are unchanged:
+    * the candidate generation of d03, shared with d07's clustering:
     *  1. COLLAPSE: docs with identical word sets (canonical sorted-array
     *     signature) join every pairing decision exactly once; identical
     *     pairs are emitted directly at j = 1 without entering the join.
-    *  2. PREFIX FILTER (asymmetric, PPJoin — Xiao, Wang, Lin, Yu 2008):
-    *     order tokens by ascending global set-frequency; the pair's
-    *     order-minimal common token w* must sit within the LONGER set's
-    *     probing prefix (⌊(1−t)n⌋+1 = ⌊0.2n⌋+1 tokens) and within the
-    *     SHORTER set's mid-prefix (n − ⌈(2t/(1+t))n⌉ + 1 = n − ⌈8n/9⌉ + 1
-    *     tokens, roughly half the probing prefix): with nb ≤ na and
-    *     c ≥ (t/(1+t))(na+nb) ≥ (2t/(1+t))·nb, all c common tokens lie
-    *     at rank ≥ rk(w*) in b, so rk(w*) ≤ nb − ⌈8nb/9⌉ + 1. Buckets
-    *     are (probe-prefix × mid-prefix) per (source, rare-token) —
-    *     round 9's symmetric probe × probe was ~2× more candidate work,
-    *     and the round-8 per-token-occurrence keying before it was
-    *     quadratic (1.12e9 candidate rows at sf1.0 for 1.5e7 pairs).
-    *  3. LENGTH + POSITIONAL FILTER, integer-exact in the join: nb ≤ na
-    *     and j ≥ 0.8 force 5·nb ≥ 4·na; and the matched token's ranks
-    *     bound the achievable overlap c ≤ 1 + min(na−rka, nb−rkb), so
-    *     9·(1 + min(na−rka, nb−rkb)) ≥ 4·(na+nb) must hold for the w*
-    *     match row of any true pair (c ≥ 4/9·(na+nb) ⟺ j ≥ 0.8).
-    *  4. VERIFY + EXPAND: one array_intersect per surviving distinct-set
-    *     pair (no exploded per-token re-join), then map set pairs back to
-    *     doc pairs — output-bound by construction.
+    *  2. JOIN: distinct sets pair through [[SetSimilarity.pairs]] under
+    *     `NearDup` with the same-source rule (prefix, length and
+    *     positional filters, then one exact verify per candidate).
+    *  3. EXPAND: set pairs map back to doc pairs — output-bound by
+    *     construction.
+    * `forceBitmask` pins the join's path for the differential spec
+    * (D03PathsSpec): both paths must produce identical pairs.
     */
-  private def wordJaccardPairs(s: SparkSession, d: String): DataFrame = {
-    val (scored, memb) = sharedSetPairs(s, d)
-    expandSetPairs(scored, memb)
-  }
+  private[graft] def wordJaccardPairsPath(s: SparkSession, d: String,
+      forceBitmask: Option[Boolean]): DataFrame =
+    expandSetPairs(wordJaccardSetPairsPath(s, d, forceBitmask))
 
   /** The SET-space pair artifact (scored set pairs + membership),
     * materialized once per (session, dir) and shared by d03's doc-pair
-    * expansion and d07's representative clustering. The scored frame is
-    * cut (it closes the 4-join candidate pipeline); memb rides the
-    * already-cut `sets` frame. */
+    * expansion and d07's representative clustering. */
   private val setPairsMemo =
     graft.Memo.artifact[(SparkSession, String), (DataFrame, DataFrame)]()
   private def sharedSetPairs(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    setPairsMemo.getOrElseUpdate((s, d), {
-      val (scored, memb) = wordJaccardSetPairsPath(s, d, forceBitmask = None)
-      (graft.graph.Superstep.cut(scored), memb)
-    })
-
-  /** Path-forcing entry for the differential spec (D03PathsSpec): both
-    * implementations must produce identical pairs on the same corpus. */
-  private[graft] def wordJaccardPairsPath(s: SparkSession, d: String,
-      forceBitmask: Option[Boolean]): DataFrame = {
-    val (scored, memb) = wordJaccardSetPairsPath(s, d, forceBitmask)
-    expandSetPairs(scored, memb)
-  }
+    setPairsMemo.getOrElseUpdate((s, d), wordJaccardSetPairsPath(s, d, forceBitmask = None))
 
   /** Doc-level expansion of distinct-set pairs: every (siga, sigb) pair
     * fans out to its member docs, plus identical-set docs pair at j = 1.
     * Output-bound by construction — the expensive similarity work all
     * happens in set space. */
-  private def expandSetPairs(scored: DataFrame, memb: DataFrame): DataFrame = {
+  private def expandSetPairs(setPairs: (DataFrame, DataFrame)): DataFrame = {
+    val (scored, memb) = setPairs
     val cross = scored
       .join(memb.select(col("source"), col("sig").as("siga"), col("doc_id").as("ia")),
         Seq("source", "siga"))
@@ -226,9 +184,9 @@ object PipelineQueries {
         // halves-to-quarters every candidate-stage shuffle row vs the
         // 32-char md5 hex it replaces (the cand exchange carries two
         // sigs across ~36M rows at sf1.0). Collision odds across ~4e4
-        // distinct sets are ~(4e4)²/2⁶⁵ ≈ 1e-10 — far below disk bit
-        // error; a collision would only collapse two sets and be caught
-        // by the d03 oracle gate.
+        // distinct sets are ~(4e4)²/2⁶⁵ ≈ 1e-10; a collision would
+        // collapse two sets, and the tripwire below fails the query
+        // loudly if one ever happens.
         .withColumn("sig", xxhash64(concat_ws(" ", col("wa"))))
         .withColumn("n", size(col("wa"))))
     // collision tripwire: distinct word-set strings must equal distinct sigs
@@ -241,103 +199,15 @@ object PipelineQueries {
     // ~25 s. (reps cut ALONE is catastrophic — 198 s — the cut flips the
     // verify joins' broadcast decision while the expensive window still
     // recomputes; always pair it with the ranked cut.)
-    val reps = graft.graph.Superstep.cut(sets.groupBy("source", "sig")
-      .agg(first(col("wa")).as("wa"), first(col("n")).as("n")))
-    // Dictionary-encodable small-domain fast path: when the corpus
-    // vocabulary fits 64 bits, each distinct word set is one BIGINT
-    // bitmask and the whole prefix/verify machinery collapses to a
-    // size-banded self-join over ~|distinct sets| longs with
-    // AND+popcount per pair — exact, not approximate. The same trick
-    // columnar engines pull with dictionary encoding; the general
-    // Vernica/PPJoin path below remains the arbitrary-vocabulary
-    // algorithm (and D03PathsSpec pins both paths identical). The probe
-    // is one bounded job: distinct tokens, short-circuited at 65.
-    val vocabSmall = forceBitmask.getOrElse(
-      reps.select(explode(col("wa")).as("w")).distinct().limit(65).count() <= 64)
-    val scored =
-      if (vocabSmall) bitmaskScored(s, reps)
-      else prefixScored(reps)
-    (scored, memb)
-  }
-
-  /** General-vocabulary candidate+verify (stages 2–4 of the scaladoc
-    * above): asymmetric PPJoin prefix filter, positional+length filter,
-    * one array_intersect per surviving pair. Returns
-    * (source, siga, sigb, jaccard) for distinct-set pairs with j ≥ 0.8. */
-  private def prefixScored(reps: DataFrame): DataFrame = {
-    // Ascending (set-frequency, token) is the shared global token order;
-    // rk ≤ ⌊n/5⌋+1 keeps exactly the ⌊(1−t)n⌋+1 order-minimal tokens.
-    val tok = reps.select(col("source"), col("sig"), col("n"), explode(col("wa")).as("w"))
-    val dfq = tok.groupBy("w").agg(count(lit(1)).as("df"))
-    // cut: ranked feeds BOTH prefix frames (probe + mid) — without it
-    // the token explode + df join + window re-run once per side (and
-    // transitively re-aggregate reps); the dominant cost of the composed
-    // plan in the sf1.0 A/B (PERF.md round 10)
-    val ranked = graft.graph.Superstep.cut(tok.join(dfq, Seq("w"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("source", "sig").orderBy(col("df"), col("w"))))
-      .select(col("source"), col("sig"), col("n"), col("w"), col("rk")))
-    // probing prefix rk ≤ ⌊n/5⌋+1; mid-prefix rk ≤ n − ⌈8n/9⌉ + 1
-    val probe = ranked.filter((col("rk") - 1) * 5 <= col("n"))
-    val mid = ranked.filter(expr("rk - 1 <= n - ((8 * n + 8) DIV 9)"))
-    // a = the (n, sig)-larger side probes with its full prefix; b = the
-    // smaller side is met on its mid-prefix only. Strict (n, sig) total
-    // order emits each unordered pair exactly once.
-    val cand = probe.select(col("source"), col("sig").as("siga"), col("n").as("na"),
-        col("w"), col("rk").as("rka"))
-      .join(mid.select(col("source"), col("sig").as("sigb"), col("n").as("nb"), col("w"),
-        col("rk").as("rkb")),
-        Seq("source", "w"))
-      .filter(col("nb") < col("na") ||
-        (col("nb") === col("na") && col("sigb") < col("siga")))
-      .filter(col("nb") * 5 >= col("na") * 4)
-      .filter((lit(1) + least(col("na") - col("rka"), col("nb") - col("rkb"))) * 9 >=
-        (col("na") + col("nb")) * 4)
-      .select("source", "siga", "sigb").distinct()
-    cand
-      .join(reps.select(col("source"), col("sig").as("siga"),
-        col("wa").as("waa"), col("n").as("na")), Seq("source", "siga"))
-      .join(reps.select(col("source"), col("sig").as("sigb"),
-        col("wa").as("wab"), col("n").as("nb")), Seq("source", "sigb"))
-      .withColumn("c", size(array_intersect(col("waa"), col("wab"))))
-      .withColumn("jaccard", col("c") / (col("na") + col("nb") - col("c")))
-      .filter(col("jaccard") >= 0.8)
-      .select("source", "siga", "sigb", "jaccard")
-  }
-
-  /** ≤64-word-vocabulary candidate+verify: dictionary-encode the corpus
-    * vocabulary (one bounded ≤64-row collect), fold each distinct set to
-    * a BIGINT bitmask, then size-band the self-join — the b-side
-    * replicates each set once per admissible partner size (na ∈
-    * [nb, ⌊5nb/4⌋], the 5·nb ≥ 4·na length filter made into an
-    * equi-join key), so every candidate pair is one codegen'd
-    * AND+popcount, no prefix frames, no distinct, no array intersect.
-    * c = popcount(ma & mb) equals the general path's array_intersect
-    * size exactly, so jaccard values are bit-identical. */
-  private def bitmaskScored(s: SparkSession, reps: DataFrame): DataFrame = {
-    val dictRows = reps.select(explode(col("wa")).as("w")).distinct()
-      .orderBy("w").collect().map(_.getString(0))
-    require(dictRows.length <= 64,
-      s"bitmask path requires vocabulary <= 64, got ${dictRows.length}")
-    val dict = s.createDataFrame(dictRows.toSeq.zipWithIndex).toDF("w", "bit")
-    val bm = graft.graph.Superstep.cut(
-      reps.select(col("source"), col("sig"), col("n"), explode(col("wa")).as("w"))
-        .join(broadcast(dict), Seq("w"))
-        .groupBy("source", "sig", "n")
-        .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), bit)")).as("mask")))
-    val aSide = bm.select(col("source"), col("sig").as("siga"),
-      col("n").as("na"), col("mask").as("ma"))
-    val bSide = bm.select(col("source"), col("sig").as("sigb"),
-        col("n").as("nb"), col("mask").as("mb"))
-      .withColumn("na", explode(sequence(col("nb"),
-        floor(col("nb") * 5 / 4).cast("int"))))
-    aSide.join(bSide, Seq("source", "na"))
-      .filter(col("nb") < col("na") ||
-        (col("nb") === col("na") && col("sigb") < col("siga")))
-      .withColumn("c", expr("CAST(bit_count(ma & mb) AS BIGINT)"))
-      .withColumn("jaccard", col("c") / (col("na") + col("nb") - col("c")))
-      .filter(col("jaccard") >= 0.8)
-      .select("source", "siga", "sigb", "jaccard")
+    val reps = graft.graph.Superstep.cut(sets.groupBy(col("source").as("group"), col("sig").as("id"))
+      .agg(first(col("wa")).as("tokens"), first(col("n")).as("n")))
+    // A ≤64-word vocabulary (every corpus in the repo) takes the
+    // kernel's bitmask path; D03PathsSpec checks it against the prefix path.
+    val scored = SetSimilarity.pairs(reps, NearDup, _ === _, forceBitmask)
+      .select(col("groupa").as("source"), col("ida").as("siga"), col("idb").as("sigb"),
+        SetSimilarity.jaccard(col("c"), col("na"), col("nb")).as("jaccard"))
+    // cut: scored closes the candidate pipeline; memb rides the cut `sets`
+    (graft.graph.Superstep.cut(scored), memb)
   }
 
   /** The ≥0.8 pair set materialized ONCE per (session, dir) and shared by
@@ -353,11 +223,10 @@ object PipelineQueries {
     graft.Memo.artifact[(SparkSession, String), DataFrame]()
   private def sharedJaccardPairs(s: SparkSession, d: String): DataFrame =
     pairsMemo.getOrElseUpdate((s, d),
-      graft.graph.Superstep.cut(
-        wordJaccardPairs(s, d).select("da", "db", "jaccard")))
+      graft.graph.Superstep.cut(expandSetPairs(sharedSetPairs(s, d))))
 
   /** DuckDB CTE prelude producing the same ≥0.8 pair set as
-    * [[wordJaccardPairs]] (terminates with a `pr(da, db)` CTE; callers
+    * [[sharedJaccardPairs]] (terminates with a `pr(da, db)` CTE; callers
     * append further CTEs/SELECT).
     */
   private val jaccardPairsSqlPrelude: String =
@@ -383,11 +252,6 @@ object PipelineQueries {
   private val hashAB: Seq[(Long, Long)] =
     (0 until 16).map(i => (((2654435761L * (i + 1)) % P) | 1L, (40503L * (i + 7) * 9973L) % P))
 
-  /** Banded MinHash signatures (doc_id, band, bh) — the 16-hash / 4×4
-    * LSH banding of d04, memoized + cut per (session, dir) because d04
-    * (pair candidates) and d13 (incremental dedup) consume the SAME
-    * artifact; at 100 TB this is the signature table an ingest pipeline
-    * writes once and probes per batch. */
   /** Per-doc 16-hash MinHash signature table (doc_id, mh0..mh15) —
     * memoized + cut; [[minhashBands]] and the d14 estimator audit both
     * derive from it. */
@@ -404,6 +268,11 @@ object PipelineQueries {
         withV.groupBy("doc_id").agg(minAggs.head, minAggs.tail: _*))
     })
 
+  /** Banded MinHash signatures (doc_id, band, bh) — the 16-hash / 4×4
+    * LSH banding of d04, memoized + cut per (session, dir) because d04
+    * (pair candidates) and d13 (incremental dedup) consume the SAME
+    * artifact; at 100 TB this is the signature table an ingest pipeline
+    * writes once and probes per batch. */
   private val bandsMemo =
     graft.Memo.artifact[(SparkSession, String), DataFrame]()
   private def minhashBands(s: SparkSession, d: String): DataFrame =
@@ -415,6 +284,22 @@ object PipelineQueries {
       graft.graph.Superstep.cut(minhashSigs(s, d).selectExpr("doc_id" +: bandExprs: _*)
         .selectExpr("doc_id", "stack(4, 0, bh0, 1, bh1, 2, bh2, 3, bh3) AS (band, bh)"))
     })
+
+  /** d04's pairs before rounding, and the pair set d14 audits: LSH
+    * band-bucket candidates (da < db) verified at exact shingle Jaccard
+    * ≥ 0.6 against per-doc shingle sets. */
+  private def minhashPairs(s: SparkSession, d: String): DataFrame = {
+    val bands = minhashBands(s, d)
+    val cand = bands.select(col("doc_id").as("ida"), col("band"), col("bh"))
+      .join(bands.select(col("doc_id").as("idb"), col("band"), col("bh")), Seq("band", "bh"))
+      .filter(col("ida") < col("idb"))
+      .select("ida", "idb").distinct()
+    val sets = shingles(s, d).groupBy(col("doc_id").as("id"))
+      .agg(collect_list(col("sh")).as("tokens"), count(lit(1)).as("n"))
+    SetSimilarity.verified(cand, sets, MinhashVerify)
+      .select(col("ida").as("da"), col("idb").as("db"),
+        SetSimilarity.jaccard(col("c"), col("na"), col("nb")).as("jaccard"))
+  }
 
   /** DuckDB CTE prelude reproducing [[minhashBands]] exactly; ends with
     * CTEs `sh` (shingles) and `bands` (doc_id, band, bh). */
@@ -738,14 +623,16 @@ object PipelineQueries {
             sum(col("cluster_size") - 1).as("n_removable"))
           .orderBy("cluster_size")
       }, {
+        // MATERIALIZED: each cc{i} reads cc{i-1} twice, and an inlined
+        // CTE chain would make DuckDB plan 2⁸ copies of the first round.
         val sb = new StringBuilder
         sb ++= jaccardPairsSqlPrelude
         sb ++= """,
-                 |und AS (SELECT da AS src, db AS dst FROM pr UNION ALL SELECT db, da FROM pr),
+                 |und AS MATERIALIZED (SELECT da AS src, db AS dst FROM pr UNION ALL SELECT db, da FROM pr),
                  |cc0 AS (SELECT DISTINCT src AS key, src AS component FROM und)""".stripMargin
         for (i <- 1 to 8) {
           sb ++= s""",
-                    |cc$i AS (SELECT key, min(component) AS component FROM (
+                    |cc$i AS MATERIALIZED (SELECT key, min(component) AS component FROM (
                     |  SELECT key, component FROM cc${i - 1}
                     |  UNION ALL
                     |  SELECT e.dst AS key, c.component FROM und e JOIN cc${i - 1} c ON c.key = e.src)
@@ -764,17 +651,9 @@ object PipelineQueries {
     // exact-Jaccard verification. Map-side until the band shuffle; no
     // all-pairs stage anywhere, so it scales to web-corpus row counts.
     "d04_neardup_minhash_lsh" -> QDef(
-      (s, d) => {
-        val bands = minhashBands(s, d)
-        val cand = bands.select(col("doc_id").as("da"), col("band"), col("bh"))
-          .join(bands.select(col("doc_id").as("db"), col("band"), col("bh")), Seq("band", "bh"))
-          .filter(col("da") < col("db"))
-          .select("da", "db").distinct()
-        jaccardOf(cand, shingles(s, d))
-          .filter(col("jaccard") >= 0.6)
-          .select(col("da"), col("db"), round(col("jaccard"), 4).as("jaccard"))
-          .orderBy("da", "db")
-      },
+      (s, d) => minhashPairs(s, d)
+        .select(col("da"), col("db"), round(col("jaccard"), 4).as("jaccard"))
+        .orderBy("da", "db"),
       minhashBandsSqlPrelude + """,
         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
         |         FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
@@ -797,12 +676,7 @@ object PipelineQueries {
     // one 16-column comparison per surviving pair.
     "d14_minhash_estimator_audit" -> QDef(
       (s, d) => {
-        val bands = minhashBands(s, d)
-        val cand = bands.select(col("doc_id").as("da"), col("band"), col("bh"))
-          .join(bands.select(col("doc_id").as("db"), col("band"), col("bh")), Seq("band", "bh"))
-          .filter(col("da") < col("db"))
-          .select("da", "db").distinct()
-        val exact = jaccardOf(cand, shingles(s, d)).filter(col("jaccard") >= 0.6)
+        val exact = minhashPairs(s, d)
         val sigs = minhashSigs(s, d)
         val matchExpr = (0 until 16)
           .map(i => s"IF(a_mh$i = b_mh$i, 1, 0)").mkString(" + ")
@@ -1628,16 +1502,13 @@ object PipelineQueries {
     // Cross-source containment (subsumption) dedup: directional shingle
     // containment C(A,B) = |sh(A) ∩ sh(B)| / |sh(A)| ≥ 0.9 with A and B
     // in different sources — the "is this doc already covered by another
-    // dump" pass run between crawl snapshots. Candidate generation is a
-    // PPJoin prefix filter, never all-pairs: rank each doc's shingles by
-    // ascending global doc-frequency and probe only the floor(n/10)+1
-    // RAREST ones — if B misses all of them then |A∩B| ≤ n−(n/10+1) <
-    // 0.9n, so the prefix probe is lossless for the 0.9 threshold.
-    // Rare-shingle probing also bounds the join fan-out (each probe key's
-    // bucket is its doc-frequency, small by construction); on a Zipfian
-    // real-corpus vocabulary the same prefix prunes orders of magnitude.
-    // All threshold comparisons are integer-only (c*10 >= n*9) so both
-    // engines agree bit-for-bit at the boundary.
+    // dump" pass run between crawl snapshots. Candidate generation is the
+    // kernel's prefix filter (SetSimilarity, `Subsumed`), never
+    // all-pairs: A probes with its floor(n/10)+1 rarest shingles against
+    // B's full set. Rare-shingle probing also bounds the join fan-out
+    // (each probe key's bucket is its doc-frequency, small by
+    // construction). All threshold comparisons are integer-only
+    // (c*10 >= n*9) so both engines agree bit-for-bit at the boundary.
     "d10_cross_source_containment" -> QDef(
       (s, d) => {
         // 8-byte hashed shingles for the candidate and verify stages
@@ -1655,29 +1526,13 @@ object PipelineQueries {
         // distinct shingle strings (carried ADVICE item, round 12).
         requireNoSigCollisionsOnce(s, d, "d10 shingle sig", shingles(s, d),
           col("sh"), xxhash64(col("sh")))
-        val sh = shingles(s, d).select(col("doc_id"), xxhash64(col("sh")).as("sh"))
-        val src = docs(s, d).select(col("doc_id"), col("source"))
-        val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-        val df = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-        val ranked = sh.join(df, Seq("sh")).join(sz, Seq("doc_id"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("doc_id").orderBy(col("df"), col("sh"))))
-          .filter((col("rk") - 1) * 10 <= col("n"))
-        val probe = ranked.join(src, Seq("doc_id"))
-          .select(col("doc_id").as("da"), col("source").as("sa"), col("n").as("na"), col("sh"))
-        val build = sh.join(sz, Seq("doc_id")).join(src, Seq("doc_id"))
-          .select(col("doc_id").as("db"), col("source").as("sb"), col("n").as("nb"), col("sh"))
-        // Length filter inside the candidate join: c ≤ nb and c ≥ ⌈0.9·na⌉
-        // force 10·nb ≥ 9·na, pruning pairs whose build side is too small
-        // to possibly cover the probe (measured 21.1e6 → 12.8e6 candidate
-        // pairs at sf1.0) before the distinct and the exact verify.
-        val cand = probe.join(build, Seq("sh"))
-          .filter(col("sa") =!= col("sb") && col("nb") * 10 >= col("na") * 9)
-          .select("da", "db").distinct()
-        val contained = jaccardOf(cand, sh).filter(col("c") * 10 >= col("na") * 9)
-        contained.join(src.select(col("doc_id").as("da"), col("source")), Seq("da"))
-          .groupBy("source")
-          .agg(countDistinct("da").as("n_subsumed"), count(lit(1)).as("n_pairs"))
+        val sets = shingles(s, d).groupBy("doc_id")
+          .agg(collect_list(xxhash64(col("sh"))).as("tokens"), count(lit(1)).as("n"))
+          .join(docs(s, d).select(col("doc_id"), col("source")), Seq("doc_id"))
+          .select(col("source").as("group"), col("doc_id").as("id"), col("n"), col("tokens"))
+        SetSimilarity.pairs(sets, Subsumed, _ =!= _)
+          .groupBy(col("groupa").as("source"))
+          .agg(countDistinct("ida").as("n_subsumed"), count(lit(1)).as("n_pairs"))
           .orderBy("source")
       },
       """WITH ws AS (SELECT doc_id, source, regexp_split_to_array(text, '\s+') AS ws FROM documents
