@@ -261,7 +261,7 @@ object GraphQueries {
         .select(col("p.sa"), col("p.sb"), col("pdeg"))
       // The CACHED frame keeps the quantized sums as LONGS and divides
       // at read: the double-sum cache measured 33 s for g08's
-      // build-and-read vs ~11 s for the all-integer frame (DevG08) —
+      // build-and-read vs ~11 s for the all-integer frame (PERF.md round 9) —
       // scaled-integer sums also keep the values order-independent and
       // oracle-exact, as before.
       val agg = wedges.groupBy("sa", "sb")
@@ -1100,11 +1100,14 @@ object GraphQueries {
         val comm = Algorithms.louvainSweeps(und, TpchGraph.nodes(s, d).select("key"), 2)
         // contraction: super-nodes = level-0 communities, weighted edges.
         // 2m (the total weight) is invariant under contraction.
-        val su = cut(und
+        // louvainSweeps cuts it once. Its super-nodes are the level-0
+        // communities: the sweeps keep only nodes with an edge, so every
+        // community is an `src` of su.
+        val su = und
           .join(comm.select(col("key").as("src"), col("comm").as("csrc")), Seq("src"))
           .join(comm.select(col("key").as("dst"), col("comm").as("cdst")), Seq("dst"))
-          .groupBy(col("csrc").as("src"), col("cdst").as("dst")).agg(count(lit(1)).as("w")))
-        val comm2 = Algorithms.louvainSweeps(su, su.select(col("src").as("key")).distinct(), 2)
+          .groupBy(col("csrc").as("src"), col("cdst").as("dst")).agg(count(lit(1)).as("w"))
+        val comm2 = Algorithms.louvainSweeps(su, comm.select(col("comm").as("key")).distinct(), 2)
         comm.select(col("key"), col("comm").as("c0"))
           .join(comm2.select(col("key").as("c0"), col("comm").as("cf")), Seq("c0"))
           .groupBy(col("cf").as("comm")).agg(count(lit(1)).as("n_nodes"))
@@ -1572,30 +1575,25 @@ object GraphQueries {
       }),
 
     // Eccentricity + pseudo-diameter over the connected banded nation
-    // graph (g24's |ka−kb| ≤ 7 band): batched multi-source BFS — ALL
-    // sources advance in one frame per round (4 rounds cover the band
-    // graph's diameter ⌈24/7⌉ = 4), per-round frontier dedup keeps the
-    // frame ≤ |V|² rows, then ecc = max min-distance per source and the
-    // diameter broadcasts back. The batched frame is the scale shape for
-    // a bounded source set; an all-nodes sweep at 100 TB would switch to
-    // the double-sweep pseudo-diameter heuristic (two BFS passes from a
-    // far pair), which this operator's frame structure already provides.
+    // graph (g24's |ka−kb| ≤ 7 band): batched multi-source BFS
+    // ([[Algorithms.sourceDistances]]) — ALL sources advance in one frame
+    // per round (4 rounds cover the band graph's diameter ⌈24/7⌉ = 4),
+    // per-round first-visit pruning keeps the frame ≤ |V|² rows, then ecc
+    // = max min-distance per source and the diameter broadcasts back.
+    // The batched frame is the scale shape for a bounded source set; an
+    // all-nodes sweep at 100 TB would switch to the double-sweep
+    // pseudo-diameter heuristic (two BFS passes from a far pair), which
+    // this operator's frame structure already provides.
     "g42_eccentricity" -> QDef(
       (s, d) => {
         val n = Tables(s, d, "nation")
+        // cut once: the sources and the kernel both read it
         val e = cut(n.select(col("n_nationkey").as("ka"))
           .join(n.select(col("n_nationkey").as("kb")),
             col("ka") =!= col("kb") && abs(col("ka") - col("kb")) <= 7)
           .select(concat(lit("nation:"), col("ka").cast("string")).as("src"),
             concat(lit("nation:"), col("kb").cast("string")).as("dst")))
-        val nodes = e.select(col("src").as("key")).distinct()
-        val start = nodes.select(col("key").as("source"), col("key"), lit(0).as("dd"))
-        val (reach, _) = Superstep.rounds(4, (start, start)) { case ((reach, frontier), i) =>
-          val next = cut(frontier.join(e, col("key") === col("src"))
-            .select(col("source"), col("dst").as("key"), lit(i).as("dd")).distinct())
-          (reach.union(next), next)
-        }
-        val ecc = reach.groupBy("source", "key").agg(min("dd").as("dd"))
+        val ecc = Algorithms.sourceDistances(e, e.select(col("src").as("key")).distinct(), Rounds(4))
           .groupBy("source").agg(max("dd").as("ecc"))
         val diam = ecc.agg(max("ecc").as("diameter"))
         ecc.crossJoin(broadcast(diam))

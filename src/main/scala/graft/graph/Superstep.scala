@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one loop runtime for iterative graph algorithms. Every loop in
   * [[Algorithms]], [[GraphQueries]] and the NQL statement path is a
@@ -44,8 +45,14 @@ object Superstep {
   final case class Fixpoint(n: Int = 256) extends Stop
 
   /** The lineage cut, for the frames a round carries into the next and
-    * for loop-invariant frames materialized once before the loop. */
-  def cut(df: DataFrame): DataFrame = df.localCheckpoint()
+    * for loop-invariant frames materialized once before the loop. A frame
+    * whose optimized plan is already a stored cut (a projection of a cut
+    * frame onto all of its columns, in order) is returned as is: copying
+    * it would only store the same rows twice. */
+  def cut(df: DataFrame): DataFrame = df.queryExecution.optimizedPlan match {
+    case r: LogicalRDD if r.rdd.isCheckpointed => df
+    case _ => df.localCheckpoint()
+  }
 
   /** Exactly `n` rounds of `step(state, round)` from `init`. */
   def rounds[S](n: Int, init: S)(step: (S, Int) => S): S =

@@ -155,17 +155,60 @@ object Algorithms {
   /** A one-row seed frame (`key`) for single-source traversals. */
   def source(s: SparkSession, key: String): DataFrame = s.range(1).select(lit(key).as("key"))
 
-  /** Min-depth BFS from the `seeds` keys (distinct, depth 0) over `edges`
-    * (directed as given — pass the symmetric closure for undirected
-    * semantics). One frontier⋈edges join per level is shared across all
-    * seeds, so several seeds give distance-to-nearest-seed without
-    * |seeds| separate traversals. Returns (key, depth).
+  /** The one level-synchronous expansion step, shared by every BFS-shaped
+    * loop ([[bfs]], [[sourceDistances]], the forward pass of
+    * [[betweennessBrandes]], the forest of [[biconnectedComponents]], NQL
+    * FIND PATH). In Pregelix terms (VLDB 2014) it is one fixed superstep
+    * plan whose message combine is one group-by: level i is
+    * `frontier ⋈ e on key = src`, grouped by `group :+ dst` (as `key`) with
+    * `agg` (no `agg`: distinct), minus every `(group, key)` already reached
+    * (left anti-join), tagged `depth = i` and cut.
+    *
+    * `start` is level 0, columns `group`, `key` and the columns `agg`
+    * names; `e` is `(src, dst)`, directed as given, passed uncut: the
+    * kernel cuts it once, and level 0, so the reached set every round's
+    * anti-join reads is a union of stored frames. Every stop rule prunes
+    * to first visits, so a key's depth is its min hop count from any
+    * start row of its group, whatever the rule; only duplicate start
+    * rows repeat a `(group, key)`.
+    *
+    * `done` probes each new level under [[Superstep.UpTo]] and
+    * [[Superstep.Fixpoint]] (default: the level is empty). Returns the
+    * reached frame (start's columns and `depth`) and the deepest level that
+    * may hold rows: the last level run, or the one before it when the
+    * default probe ended the loop on an empty level.
+    */
+  def expand(e: DataFrame, start: DataFrame, stop: Stop, group: Seq[String] = Nil,
+      agg: Seq[Column] = Nil, done: Option[DataFrame => Boolean] = None): (DataFrame, Int) = {
+    val edges = cut(e.select("src", "dst"))
+    val keys = group :+ "key"
+    val to = group.map(col) :+ col("dst").as("key")
+    val level0 = cut(start.withColumn("depth", lit(0)))
+    var endedEmpty = false
+    val (reached, _, last) = Superstep.run(stop, (level0, level0, 0)) { case ((reached, frontier, _), i) =>
+      val hop = frontier.join(edges, col("key") === col("src"))
+      val level = if (agg.isEmpty) hop.select(to: _*).distinct()
+        else hop.groupBy(to: _*).agg(agg.head, agg.tail: _*)
+      val next = cut(level.join(reached.select(keys.map(col): _*), keys, "left_anti")
+        .withColumn("depth", lit(i)))
+      (reached.unionByName(next), next, i)
+    } { case (_, (_, next, _)) => done match {
+      case Some(probe) => probe(next)
+      case None => endedEmpty = next.count() == 0; endedEmpty
+    } }
+    (reached, if (endedEmpty) last - 1 else last)
+  }
+
+  /** Min-depth BFS from the `seeds` keys (depth 0) over `edges` (directed
+    * as given — pass the symmetric closure for undirected semantics), one
+    * [[expand]] level per round for all seeds at once, so several seeds
+    * give distance-to-nearest-seed without |seeds| separate traversals.
+    * Returns (key, depth).
     *
     * `stop`: [[Superstep.Rounds]] explores exactly that many levels (the
     * gate queries); [[Superstep.Fixpoint]] runs until the frontier is
     * empty, giving every reachable node its true distance, and throws
-    * past the cap. The anti-join against the reached set makes the
-    * frontier strictly shrink toward that fixpoint.
+    * past the cap.
     *
     * Traversal filters (reference `graph_engine/src/lib.rs:4674-4790`
     * takes a `TraversalFilter`, `lib.rs:482-654`, with node and edge
@@ -174,33 +217,18 @@ object Algorithms {
     * which nodes the frontier may ENTER (a one-column `key` frame,
     * semi-joined against edge destinations). The seeds are always
     * included, matching the reference's start-node semantics. Both
-    * filters are applied ONCE to the edge frame before the loop, so the
-    * per-round plan shape is identical to the unfiltered BFS — at
-    * cluster scale the filter rides the edge scan for free.
+    * filters shape the edge frame [[expand]] cuts once before the loop,
+    * so the per-round plan shape is identical to the unfiltered BFS.
     */
   def bfs(edges: DataFrame, seeds: DataFrame, stop: Stop,
       edgePred: Option[Column] = None,
       allowedNodes: Option[DataFrame] = None): DataFrame = {
     val eFiltered = edgePred.map(edges.filter).getOrElse(edges)
-    // The filtered edge frame is loop-invariant — materialize it once so
-    // the per-level join reads stored rows instead of re-running the
-    // filter/semi-join every level (guide §2.4; round 13).
-    val e = cut(allowedNodes match {
-      case Some(allowed) => eFiltered
-        .join(allowed.select(col("key").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst")
-      case None => eFiltered.select("src", "dst")
-    })
-    val start = seeds.select(col("key"), lit(0).as("depth"))
-    val (reached, _) = Superstep.run(stop, (start, start)) { case ((reached, frontier), i) =>
-      val next = cut(frontier.join(e, col("key") === col("src"))
-        .select(col("dst").as("key"), lit(i).as("depth"))
-        .distinct()
-        .join(reached.select(col("key").as("seen")), col("key") === col("seen"), "left_anti"))
-      (reached.union(next), next)
-    } { case (_, (_, next)) => next.count() == 0 }
-    // min() guards duplicate keys if maxDepth revisits via shorter paths
-    reached.groupBy("key").agg(min("depth").cast("int").as("depth"))
+    val e = allowedNodes.fold(eFiltered)(allowed =>
+      eFiltered.join(allowed.select(col("key").as("dst")), Seq("dst"), "left_semi"))
+    // min() folds duplicate seeds, the only repeated keys
+    expand(e, seeds.select("key"), stop)._1
+      .groupBy("key").agg(min("depth").cast("int").as("depth"))
   }
 
   /** Deterministic hash-greedy random walk: from each seed, `steps` hops;
@@ -215,7 +243,7 @@ object Algorithms {
     */
   def hashGreedyWalk(und: DataFrame, seeds: DataFrame, steps: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-    val e = cut(und.select("src", "dst")) // loop-invariant (see [[bfs]])
+    val e = cut(und.select("src", "dst")) // loop-invariant (see [[expand]])
     val start = seeds.select(col("key").as("walk_id"), col("key").as("cur"),
       col("key").as("path"))
     Superstep.rounds(steps, start) { (f, i) =>
@@ -235,7 +263,7 @@ object Algorithms {
     * Returns (key, cost) for reached nodes.
     */
   def sssp(edges: DataFrame, source: String, iters: Int): DataFrame = {
-    val e = cut(edges.select("src", "dst", "w")) // loop-invariant (see [[bfs]])
+    val e = cut(edges.select("src", "dst", "w")) // loop-invariant (see [[expand]])
     val start = edges.sparkSession.range(1).select(lit(source).as("key"), lit(0.0).as("cost"))
     Superstep.rounds(iters, start) { (dist, _) =>
       val relaxed = dist.join(e, col("key") === col("src"))
@@ -398,18 +426,6 @@ object Algorithms {
     } { case (_, (labels, i)) => batchEnd(i) && stable(labels, e) }._1
   }
 
-  /** Min label of any node reachable (in ≤ iters hops) along directed
-    * edges — building block for SCC detection.
-    */
-  def minReachLabel(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
-    val e = cut(edges.select("src", "dst")) // loop-invariant (see [[bfs]])
-    Superstep.rounds(iters, nodes.select(col("key"), col("key").as("lbl"))) { (f, _) =>
-      val pulled = e.join(f.select(col("key").as("dst"), col("lbl")), Seq("dst"))
-        .select(col("src").as("key"), col("lbl"))
-      cut(f.union(pulled).groupBy("key").agg(min("lbl").as("lbl")))
-    }
-  }
-
   /** Directed reachability closure by squaring: after k rounds the frame
     * holds every (src, dst) with a path of length ≤ 2^k. log(diameter)
     * shuffle rounds instead of diameter rounds — the right trade when
@@ -515,29 +531,14 @@ object Algorithms {
   }
 
   /** Multi-source BFS distances (source, key, dd = min hops) from every
-    * `sources` key, all sources sweeping in ONE batched frame. Under
-    * [[Superstep.Rounds]] the frontier skips the reached-set anti-join
-    * (cheap for the gate queries' horizon of 2, and min(dd) dedupes
-    * after the fact), matching the unrolled oracle. That frontier never
-    * empties on a cyclic graph, so a probed rule runs the anti-join body:
-    * each round keeps only first-visited (source, key) pairs, the
-    * frontier strictly shrinks, and the loop ends when every source has
-    * exhausted its component. */
-  def sourceDistances(und: DataFrame, sources: DataFrame, stop: Stop): DataFrame = {
-    val e = cut(und.select("src", "dst")) // loop-invariant (see [[bfs]])
-    val start = sources.select(col("key").as("source"), col("key"), lit(0).as("dd"))
-    val (reach, _) = Superstep.run(stop, (start, start)) { case ((reach, frontier), i) =>
-      val hop = frontier.join(e, col("key") === col("src"))
-        .select(col("source"), col("dst").as("key"), lit(i).as("dd"))
-      val next = cut(stop match {
-        case Rounds(_) => hop
-        case _ => hop.distinct()
-          .join(reach.select(col("source"), col("key")), Seq("source", "key"), "left_anti")
-      })
-      (reach.union(next), next)
-    } { case (_, (_, next)) => next.count() == 0 }
-    reach.groupBy("source", "key").agg(min("dd").as("dd"))
-  }
+    * `sources` key, all sources sweeping in ONE batched frame: one
+    * [[expand]] grouped by `source`. Each round keeps only first-visited
+    * (source, key) pairs under every stop rule, so the frontier strictly
+    * shrinks, and a probed rule ends when every source has exhausted its
+    * component. */
+  def sourceDistances(und: DataFrame, sources: DataFrame, stop: Stop): DataFrame =
+    expand(und, sources.select(col("key").as("source"), col("key")), stop, group = Seq("source"))._1
+      .groupBy("source", "key").agg(min("depth").as("dd"))
 
   /** Closeness centrality (the g18 engine, and `GRAPH CLOSENESS` run to
     * fixpoint): (reached − 1) / Σdist per source over
@@ -661,10 +662,11 @@ object Algorithms {
   }
 
   /** Sampled Brandes betweenness (reference Brandes `lib.rs:7058-7220`,
-    * generalized beyond the diameter-2 midpoint form of g20): forward
-    * level-synchronous multi-source BFS accumulates shortest-path counts
-    * σ(s,v) (each level's σ is the sum over predecessors — exact because
-    * the whole frontier is aggregated before expanding), then the backward
+    * generalized beyond the diameter-2 midpoint form of g20): the forward
+    * multi-source BFS ([[expand]] grouped by source, σ summed) accumulates
+    * shortest-path counts σ(s,v) (each level's σ is the sum over
+    * predecessors — exact because the whole frontier is aggregated before
+    * the first-visit prune), then the backward
     * pass accumulates dependencies δ(v) = Σ_w (σ_v/σ_w)(1+δ_w) level by
     * level from the deepest ring inward. bc(v) = Σ_{s∈sources} δ_s(v).
     *
@@ -672,9 +674,8 @@ object Algorithms {
     * horizon (the gate query); [[Superstep.Fixpoint]] runs until every
     * source exhausts its component — on user-shaped graphs a fixed
     * horizon silently drops every shortest path longer than it — and
-    * throws past the cap. The forward expansion anti-joins the reached
-    * set, so its frontier empties naturally at fixpoint; the backward
-    * accumulation then walks the levels actually discovered.
+    * throws past the cap. The backward accumulation walks down from the
+    * deepest level [[expand]] reports.
     *
     * With all sources it is exact Brandes; with a deterministic sample it
     * is the standard pivot estimator — O(|sources|·E) instead of O(V·E),
@@ -683,37 +684,27 @@ object Algorithms {
     * partition by source and stream.
     */
   def betweennessBrandes(und: DataFrame, sources: DataFrame, stop: Stop): DataFrame = {
+    // the backward pass re-reads the edges; expand keeps this stored frame
     val e = cut(und.select("src", "dst"))
-    // forward: (source, key, dist, sigma)
-    val start = sources.select(col("key").as("source"), col("key"),
-      lit(0).as("dist"), lit(1L).as("sigma"))
-    val (reached, _, rounds) = Superstep.run(stop, (start, start, 0)) {
-      case ((reached, frontier, _), i) =>
-        val expand = cut(frontier.join(e, col("key") === col("src"))
-          .groupBy(col("source"), col("dst"))
-          .agg(sum("sigma").as("sigma"))
-          .join(reached.select(col("source"), col("key").as("dst")), Seq("source", "dst"), "left_anti")
-          .select(col("source"), col("dst").as("key"), lit(i).as("dist"), col("sigma")))
-        (reached.union(expand), expand, i)
-    } { case (_, (_, expand, _)) => expand.count() == 0 }
-    // a fixpoint ends on the first empty level: the deepest level that
-    // holds nodes is the one before it
-    val maxDepth = stop match { case Fixpoint(_) => rounds - 1; case _ => rounds }
+    // forward: (source, key, sigma, depth)
+    val (reached, maxDepth) = expand(e,
+      sources.select(col("key").as("source"), col("key"), lit(1L).as("sigma")), stop,
+      group = Seq("source"), agg = Seq(sum("sigma").as("sigma")))
     // backward: delta per (source, key), deepest level = 0.0, then each
     // level pulls (σ_v/σ_w)(1+δ_w) from its successors one ring out.
     // Level 0 is the sources themselves — δ_s(s) never counts, skip it.
-    val deepest = reached.filter(col("dist") === maxDepth).withColumn("delta", lit(0.0))
+    val deepest = reached.filter(col("depth") === maxDepth).withColumn("delta", lit(0.0))
     val delta = Superstep.rounds(maxDepth - 1, deepest) { (delta, i) =>
       val lvl = maxDepth - i
-      val upper = delta.filter(col("dist") === lvl + 1)
+      val upper = delta.filter(col("depth") === lvl + 1)
         .select(col("source"), col("key").as("dst"), col("sigma").as("sigw"), col("delta").as("dw"))
-      val level = reached.filter(col("dist") === lvl)
+      val level = reached.filter(col("depth") === lvl)
       val contrib = level.join(e, col("key") === col("src"))
         .join(upper, Seq("source", "dst"))
         .groupBy("source", "key")
         .agg(sum((col("sigma").cast("double") / col("sigw")) * (lit(1.0) + col("dw"))).as("dsum"))
       delta.union(cut(level.join(contrib, Seq("source", "key"), "left")
-        .select(col("source"), col("key"), col("dist"), col("sigma"),
+        .select(col("source"), col("key"), col("sigma"), col("depth"),
           coalesce(col("dsum"), lit(0.0)).as("delta"))))
     }
     delta.filter(col("key") =!= col("source"))
@@ -752,7 +743,7 @@ object Algorithms {
     * and the bound is a one-row aggregate over the materialized labels.
     */
   private def astarLoop(edges: DataFrame, h: DataFrame, source: String, target: String, iters: Int): DataFrame = {
-    // loop-invariant frames materialize once (see [[bfs]])
+    // loop-invariant frames materialize once (see [[expand]])
     val e = cut(edges.select("src", "dst", "w"))
     val hp = cut(h.select("key", "h"))
     val start = edges.sparkSession.range(1).select(lit(source).as("key"), lit(0.0).as("cost"))
@@ -808,25 +799,20 @@ object Algorithms {
     */
   def biconnectedComponents(und: DataFrame, roots: Option[DataFrame] = None,
       forest: Stop = Fixpoint(), climb: Stop = Fixpoint(), cc: Stop = Fixpoint()): DataFrame = {
-    val e = cut(und.select("src", "dst")) // loop-invariant (see [[bfs]])
+    val e = cut(und.select("src", "dst")) // loop-invariant (see [[expand]])
     def components(u: DataFrame, n: DataFrame) = cc match {
       case Rounds(_) => connectedComponents(u, n, cc)
       case _ => connectedComponentsFixpoint(u, n, cc)
     }
     // self-roots: the component label IS the min node key — a valid,
     // deterministic root for every component
-    val rootKeys = roots.getOrElse(cut(
+    val rootKeys = roots.getOrElse(
       components(e, e.select(col("src").as("key")).distinct())
-        .select(col("component").as("key")).distinct()))
-    // BFS forest: (key, parent, depth). Roots are their own parents.
-    val tree0 = rootKeys.select(col("key"), col("key").as("parent"), lit(0).as("depth"))
-    val (tree, _) = Superstep.run(forest, (tree0, tree0)) { case ((tree, frontier), i) =>
-      val next = cut(frontier.join(e, col("key") === col("src"))
-        .groupBy(col("dst")).agg(min(col("key")).as("parent")) // deterministic parent: min neighbor
-        .join(tree.select(col("key").as("dst")), Seq("dst"), "left_anti")
-        .select(col("dst").as("key"), col("parent"), lit(i).as("depth")))
-      (tree.union(next), next)
-    } { case (_, (_, next)) => next.count() == 0 }
+        .select(col("component").as("key")).distinct())
+    // BFS forest: (key, parent, depth). Roots are their own parents; a
+    // node's parent is its min-key neighbor one level up (deterministic).
+    val (tree, _) = expand(e, rootKeys.select(col("key"), col("key").as("parent")), forest,
+      agg = Seq(min("src").as("parent")))
     // tree is read ~6 more times below (edge ids + two parent joins per
     // climb round) — one cut here pays for itself.
     val treeCut = cut(tree)

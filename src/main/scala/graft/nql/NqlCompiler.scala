@@ -2,7 +2,7 @@ package graft.nql
 
 import graft.Tables
 import graft.functions.VectorFunctions._
-import graft.graph.{Algorithms, GraphXAdapters, Superstep, TpchGraph}
+import graft.graph.{Algorithms, GraphXAdapters, TpchGraph}
 import graft.graph.Superstep.{cut, Fixpoint, Rounds, UpTo}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -135,41 +135,34 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
   }
 
   /** FIND PATH FROM+TO executor: level-synchronous BFS over the
-    * undirected closure of `edges`, tracking a deterministic min-key
-    * parent per node, then backtracking `to → from` into an ordered
-    * (hop, key) list. The BFS is the same keyed-shuffle-per-round shape
-    * as every other iterative loop here, ending early once the target is
-    * reached or the frontier is empty (one probe action per round); the
+    * undirected closure of `edges` ([[Algorithms.expand]], a node's parent
+    * is its min-key neighbor one level up), then backtracking `to → from`
+    * into an ordered (hop, key) list. The BFS ends early once the target
+    * is reached or the frontier is empty (one probe action per round); the
     * backtrack is ONE composed job of ≤ maxDepth broadcast point-lookup
-    * self-joins against the MATERIALIZED tree frame (plus a single
-    * one-row collect for the target's depth) — bounded by the depth cap,
-    * never by data size.
+    * self-joins against the stored levels (plus a single one-row collect
+    * for the target's depth) — bounded by the depth cap, never by data
+    * size.
     * Unreachable targets return an empty frame (reference returns zero
     * path items). */
   private def findPathBfs(edges: DataFrame, from: String, to: String,
       maxDepth: Int = 6): DataFrame = {
     import spark.implicits._
-    val und = TpchGraph.undirected(edges).select("src", "dst")
-    val start = cut(Seq((from, from, 0)).toDF("key", "parent", "depth"))
-    // state: (tree, target found, frontier non-empty)
-    val (tree, found, _) = Superstep.run(UpTo(if (from == to) 0 else maxDepth),
-        (start, from == to, true)) { case ((tree, _, _), i) =>
-      val frontier = tree.filter(col("depth") === i - 1).select(col("key").as("src"))
-      val nxt = und.join(frontier, Seq("src"))
-        .join(tree.select(col("key").as("dst")), Seq("dst"), "left_anti")
-        .groupBy("dst").agg(min("src").as("parent"))
-        .select(col("dst").as("key"), col("parent"), lit(i).as("depth"))
-      val next = cut(tree.union(nxt))
-      val probe = next.agg(max((col("key") === to).cast("int")), max(col("depth"))).first()
-      (next, probe.getInt(0) == 1, probe.getInt(1) == i)
-    } { case (_, (_, found, alive)) => found || !alive }
-    if (!found) return Seq.empty[(Int, String)].toDF("hop", "key")
+    val foundOrEmpty = (level: DataFrame) => {
+      val p = level.agg(max((col("key") === to).cast("int")), count(lit(1))).first()
+      p.getLong(1) == 0 || p.getInt(0) == 1
+    }
+    val (tree, _) = Algorithms.expand(TpchGraph.undirected(edges),
+      Seq((from, from)).toDF("key", "parent"), UpTo(if (from == to) 0 else maxDepth),
+      agg = Seq(min("src").as("parent")), done = Some(foundOrEmpty))
+    val hit = tree.filter(col("key") === to).select("depth").collect()
+    if (hit.isEmpty) return Seq.empty[(Int, String)].toDF("hop", "key")
     // Backtrack to → from as ONE composed job: the parent chain is d
     // bounded self-joins against the materialized tree (each a broadcast
     // point lookup), unioned lazily — a single collect fetches the
     // target's depth and a single job materializes the whole hop list,
     // instead of one driver round-trip per hop.
-    val d = tree.filter(col("key") === to).select("depth").collect()(0).getInt(0)
+    val d = hit(0).getInt(0)
     var step = tree.filter(col("key") === to)
     val steps = Seq.newBuilder[DataFrame]
     steps += step
@@ -488,13 +481,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       val treeSlice = allEdges.filter(col("etype").isin("in_region", "in_nation"))
       val prEdges = (etype, direction) match {
         case (None, None) => treeSlice
-        case _ =>
-          val f = edgesWhere(etype = etype)
-          direction.getOrElse("out") match {
-            case "out" => f
-            case "in" => f.select(col("dst").as("src"), col("src").as("dst"), col("etype"))
-            case _ => TpchGraph.undirected(f)
-          }
+        case _ => orientedEdges(etype, direction, "out")
       }
       val pr =
         if (engine == "graphx")
@@ -632,10 +619,9 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     // Deterministic tie-breaks on key.
     case GraphDiameter() =>
       val und = TpchGraph.undirected(allEdges)
-      // seeds are cut: every round's anti-join re-reads them
-      val start = cut(allNodes.orderBy("key").limit(1).select("key"))
-      val far1 = cut(Algorithms.bfs(und, start, Fixpoint())
-        .orderBy(desc("depth"), col("key")).limit(1).select("key"))
+      val start = allNodes.orderBy("key").limit(1).select("key")
+      val far1 = Algorithms.bfs(und, start, Fixpoint())
+        .orderBy(desc("depth"), col("key")).limit(1).select("key")
       Algorithms.bfs(und, far1, Fixpoint())
         .orderBy(desc("depth"), col("key")).limit(1)
         .select(col("key").as("peripheral_key"),
@@ -654,14 +640,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     case GraphBetweenness(samplePct, etype, direction) =>
       // traversed edge set: default = undirected overlay closure; with
       // EDGE TYPE / direction, the reference's filtered/oriented form
-      val bwEdges = {
-        val f = edgesWhere(etype = etype)
-        direction.getOrElse("both") match {
-          case "out" => f
-          case "in" => f.select(col("dst").as("src"), col("src").as("dst"), col("etype"))
-          case _ => TpchGraph.undirected(f)
-        }
-      }
+      val bwEdges = orientedEdges(etype, direction, "both")
       samplePct match {
         case None =>
           // hub-layer sources (the g22 construction), but the BFS runs to
@@ -680,8 +659,8 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
           // rule as the SAMPLE statement.
           val n = allNodes.count()
           val k = math.ceil(n * pct / 100.0).toLong
-          val sources = cut(allNodes.select("key")
-            .orderBy(md5(col("key")), col("key")).limit(k.toInt))
+          val sources = allNodes.select("key")
+            .orderBy(md5(col("key")), col("key")).limit(k.toInt)
           val scale = n.toDouble / k
           Algorithms.betweennessBrandes(bwEdges, sources, Fixpoint())
             .select(col("key"), round(col("betweenness") * scale, 6).as("betweenness"))
@@ -693,19 +672,13 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
     case GraphCloseness(etype, direction) =>
       // default keeps the g18 nation/region in_region-tree form; EDGE
       // TYPE / direction select the reference's filtered/oriented set
-      val e = edgesWhere(etype = Some(etype.getOrElse("in_region")))
-      val walked = direction.getOrElse("both") match {
-        case "out" => e.select("src", "dst")
-        case "in" => e.select(col("dst").as("src"), col("src").as("dst"))
-        case _ => e.select(col("src"), col("dst"))
-          .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      }
+      val walked = orientedEdges(Some(etype.getOrElse("in_region")), direction, "both")
+        .select("src", "dst")
       // fixpoint BFS per source: exact closeness on whatever slice the
       // user selected, however deep the overlay makes it (on the base
       // in_region default the slice is 5 disjoint stars — the fixpoint
       // exhausts at depth 2, so base results are unchanged)
-      Algorithms.closeness(walked,
-          cut(walked.select(col("src").as("key")).distinct()), Fixpoint())
+      Algorithms.closeness(walked, walked.select(col("src").as("key")).distinct(), Fixpoint())
         .orderBy(desc("closeness"), col("key")).limit(30)
 
     case GraphLabelProp(iters, etype, direction) =>

@@ -3,11 +3,13 @@ package graft
 import graft.graph.{Algorithms, Superstep}
 import graft.graph.Superstep.{Fixpoint, Rounds, UpTo}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The loop driver's three stop rules, on plain values and on the graph
   * loops that run to a probed fixpoint (each must throw at a cap below
-  * the depth its graph needs, instead of returning a truncated answer).
+  * the depth its graph needs, instead of returning a truncated answer),
+  * and its cut of an already stored frame.
   */
 class SuperstepSpec extends AnyFunSuite {
   import TestSpark._
@@ -35,6 +37,17 @@ class SuperstepSpec extends AnyFunSuite {
     val count = (s: Int, _: Int) => s + 1
     assert(Superstep.run(Fixpoint(5), 0)(count)((_, s) => s == 5) == 5)
     assertThrows[IllegalStateException](Superstep.run(Fixpoint(4), 0)(count)((_, s) => s == 5))
+  }
+
+  test("a cut of a stored frame, or of its projection onto all its columns, stores nothing new") {
+    def rdd(df: DataFrame) = df.queryExecution.optimizedPlan.asInstanceOf[LogicalRDD].rdd
+    val stored = Superstep.cut(Seq((1, "a"), (2, "b")).toDF("n", "s"))
+    assert(Superstep.cut(stored) eq stored)
+    val all = stored.select("n", "s")
+    assert(Superstep.cut(all) eq all)
+    val part = Superstep.cut(stored.select("s"))
+    assert(rdd(part).isCheckpointed && (rdd(part) ne rdd(stored)))
+    assert(part.collect().map(_.getString(0)).toSeq == Seq("a", "b"))
   }
 
   /** Undirected path p00 – p01 – … – p11 (12 nodes, depth 11 from p00). */

@@ -48,7 +48,7 @@ object DevProfile {
         fn(spark, d).count()
         val wall = (System.nanoTime() - t0) / 1e9
         // listener bus is async — let the counters drain before reading
-        Thread.sleep(300)
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
         println(f"$n%-34s $rep%3d ${wall}%8.2f ${jobs.get}%5d ${stages.get}%7d ${tasks.get}%6d ${taskMs.get / 1e3}%8.2f")
       }
     }
