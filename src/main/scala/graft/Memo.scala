@@ -6,8 +6,9 @@ import scala.collection.concurrent.TrieMap
 
 /** Central registry for every session-scoped memo map in the library,
   * giving the embedding application a LIFECYCLE for what is otherwise
-  * write-once state: the shared derived artifacts (canonical edge
-  * frames, triangle stats, shingle tables, signature/band frames, BPE
+  * write-once state: the shared derived artifacts (the base frames of
+  * [[Tables]] and [[graft.graph.TpchGraph]], canonical edge frames,
+  * triangle stats, shingle tables, signature/band frames, BPE
   * vocabularies, …) and the session-scoped user state (built ANN
   * indexes, declared vector collections, registered graph constraints).
   *
@@ -19,20 +20,16 @@ import scala.collection.concurrent.TrieMap
   * at creation, so one call can walk them all:
   *
   *  - [[clearArtifacts]] — drop the session's DERIVED artifacts and
-  *    unpersist their cached frames. Safe at any point: every artifact
-  *    is rebuilt on demand by its owning query. This is also the
-  *    invalidation hook when the underlying parquet data changed —
-  *    memoized artifacts snapshot the data as of first use.
+  *    unpersist their cached frames, the base table and base graph
+  *    frames included. Safe at any point: every artifact is rebuilt on
+  *    demand by its owner. This is also the invalidation hook when the
+  *    underlying parquet data changed — held frames snapshot the file
+  *    listing, schema and (for the cached ones) the data as of first use.
   *  - [[close]] — [[clearArtifacts]] plus the session's USER STATE
   *    (ANN indexes, collection configs, constraint definitions). Call
   *    when the session is done; afterwards the session holds no
   *    library references and `SIMILAR … USING INDEX` would need a
   *    rebuild, exactly as in a fresh session.
-  *
-  * Base-table caches (`Tables`/`TpchGraph` `.cache()` frames) live in
-  * Spark's own CacheManager, keyed by canonicalized plan, and are
-  * dropped by `spark.catalog.clearCache()` — they are deliberately NOT
-  * registered here because Spark already owns their lifecycle.
   *
   * Registration happens in static initializers of a handful of objects,
   * so the registry is small (≈15 maps) and append-only; per-entry
@@ -102,8 +99,7 @@ object Memo {
 
   /** Drop EVERYTHING the library holds for `session` — derived
     * artifacts and user state. After this the session is as the library
-    * found it (Spark's own `catalog.clearCache()` handles base-table
-    * caches). */
+    * found it. */
   def close(session: SparkSession): Unit = clear(session, includeState = true)
 
   /** Number of memo entries held for `session` (artifacts + state) —

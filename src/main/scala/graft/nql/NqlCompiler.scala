@@ -72,7 +72,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
   private def nodesWhere(keys: Option[Seq[String]] = None, label: Option[String] = None): DataFrame = {
     def byKey(df: DataFrame) = keys.fold(df)(ks => df.filter(col("key").isin(ks: _*)))
     def byLabel(df: DataFrame) = label.fold(df)(l => df.filter(col("label") === l))
-    def base = byLabel(byKey(NqlCompiler.baseGraph(spark, sfDir).nodes))
+    def base = byLabel(byKey(TpchGraph.nodes(spark, sfDir)))
     store match {
       case None => base
       case Some(st) =>
@@ -97,7 +97,7 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       val t = touching.fold(df)(k => df.filter(col("src") === k || col("dst") === k))
       etype.fold(t)(e => t.filter(col("etype") === e))
     }
-    def base = restrict(NqlCompiler.baseGraph(spark, sfDir).edges)
+    def base = restrict(TpchGraph.edges(spark, sfDir))
     store match {
       case None => base
       case Some(st) =>
@@ -1543,19 +1543,6 @@ object NqlCompiler {
 
   /** Tombstone batch size for MATCH ... DELETE streaming. */
   private[nql] val DeleteBatchSize = 10000
-
-  /** The base graph frames the overlay reads, held per (session, data
-    * dir) so a statement does not rebuild them: building one reads its
-    * tables again, and each parquet read runs a schema-inference job.
-    * A plain class, not a Product: clearing the memo drops this handle
-    * but leaves the frames' Spark caches to [[TpchGraph]]. */
-  private[nql] final class BaseGraph(spark: SparkSession, sfDir: String) {
-    lazy val nodes: DataFrame = TpchGraph.nodes(spark, sfDir)
-    lazy val edges: DataFrame = TpchGraph.edges(spark, sfDir)
-  }
-  private val baseGraphs = graft.Memo.artifact[(SparkSession, String), BaseGraph]()
-  private[nql] def baseGraph(spark: SparkSession, sfDir: String): BaseGraph =
-    baseGraphs.getOrElseUpdate((spark, sfDir), new BaseGraph(spark, sfDir))
 
   /** What the TPC-H-derived base graph can hold ([[TpchGraph]]): node
     * key prefixes, node labels and edge types. A predicate outside these

@@ -1,14 +1,20 @@
 package graft
 
-import graft.graph.GraphQueries
+import graft.graph.{GraphQueries, TpchGraph}
 import graft.nql.Nql
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Lifecycle of the central memo registry ([[graft.Memo]]): derived
-  * artifacts drop and unpersist on `clearArtifacts` and rebuild on next
-  * use with identical results; session user state (a built ANN index)
-  * survives `clearArtifacts` and is dropped only by `close`.
+  * artifacts, the base table and base graph frames among them, drop and
+  * unpersist on `clearArtifacts` and rebuild on next use with identical
+  * results; session user state (a built ANN index) survives
+  * `clearArtifacts` and is dropped only by `close`.
   */
 class MemoLifecycleSpec extends AnyFunSuite {
   import TestSpark._
@@ -31,6 +37,42 @@ class MemoLifecycleSpec extends AnyFunSuite {
     assert(after == before)
     assert(GraphQueries.triStatsCanonical(spark, sf) ne stats,
       "the artifact must have been rebuilt, not resurrected")
+  }
+
+  test("base frames are built once per session and dir, read through one cache, and dropped by clearArtifacts") {
+    def frames() = Seq(Tables(spark, sf, "nation"), TpchGraph.nodes(spark, sf), TpchGraph.edges(spark, sf))
+    val held = frames()
+    val group = "memo-base-frames"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val again = try {
+      spark.sparkContext.setJobGroup(group, "second reads of the base frames", interruptOnCancel = false)
+      try frames() finally spark.sparkContext.clearJobGroup()
+    } finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, "a second read of a held base frame must run no Spark job")
+    assert(again.zip(held).forall { case (a, b) => a eq b })
+
+    def leaves(df: DataFrame): Seq[LogicalPlan] = df.queryExecution.optimizedPlan.collectLeaves()
+    for ((name, df) <- Seq("edges" -> TpchGraph.edges(spark, sf), "treeEdges" -> TpchGraph.treeEdges(spark, sf))) {
+      val ls = leaves(df)
+      assert(ls.exists(_.isInstanceOf[InMemoryRelation]), s"$name must read the cached edges: $ls")
+      assert(!ls.exists(_.isInstanceOf[LogicalRelation]), s"$name must not scan parquet: $ls")
+    }
+
+    val rows = held.map(_.collect().toSeq)
+    Memo.clearArtifacts(spark)
+    assert(held.tail.forall(_.storageLevel == StorageLevel.NONE),
+      "clearArtifacts must unpersist the base graph frames")
+    val rebuilt = frames()
+    assert(rebuilt.zip(held).forall { case (a, b) => a ne b }, "the base frames must have been rebuilt")
+    assert(rebuilt.map(_.collect().toSeq) == rows)
   }
 
   // The index registry is private[nql]; observe it through the statement
