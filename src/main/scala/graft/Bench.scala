@@ -10,9 +10,11 @@ package graft
   * `--runs N` (or env SPARK_GRAFT_RUNS, default 3) full sweeps and every
   * reported per-query number and the headline total are PER-QUERY MEDIANS
   * across draws. Raw draws are written alongside to SPARK_GRAFT_BENCH_OUT
-  * (default `tools/bench_last.json`, relative to the launch cwd) so the
+  * (default `tools/bench_last_c<cpus>.json` relative to the launch cwd, one
+  * file per CPU count so a scaling run keeps the other count's) so the
   * full-resolution artifact survives the harness's ~2 KB stdout-tail
   * capture window — per-query stdout JSON was head-truncated in BENCH_r11.
+  * Each query is timed by `count()`, the action every round has timed.
   *
   * An untimed warmup (the flagship `entry`) absorbs JVM/codegen startup so
   * per-query numbers reflect steady-state; queries run in name order so
@@ -106,18 +108,7 @@ object Bench {
       val fromArgs = args.sliding(2).collectFirst { case Array("--runs", n) => n.toInt }
       fromArgs.orElse(sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt)).getOrElse(3).max(1)
     }
-    val rawOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "tools/bench_last.json")
-    // Timed action. Default "count" — the action every round has timed, so
-    // cross-round numbers stay comparable (the driver contract). "noop"
-    // (guide §1.4) computes EVERY column of every row via the no-op sink,
-    // immune to count()'s column pruning / sort elimination — used for
-    // isolation work; the count-vs-noop delta for this suite is recorded in
-    // OPTIMIZATION_r12.md.
-    val sink = sys.env.getOrElse("SPARK_GRAFT_SINK", "count")
-    require(sink == "count" || sink == "noop", s"SPARK_GRAFT_SINK=$sink (want count|noop)")
-    val runQuery: org.apache.spark.sql.DataFrame => Unit =
-      if (sink == "noop") df => df.write.format("noop").mode("overwrite").save()
-      else df => { df.count(); () }
+    val rawOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"tools/bench_last_c$cpus.json")
     val spark = GraftSession.local(cpus)
 
     // Untimed warmup at the smallest SF: the flagship entry plus one
@@ -146,7 +137,7 @@ object Bench {
         // Label the jobs (guide §1.5) so UI/eventlog stages map to queries.
         spark.sparkContext.setJobDescription(s"bench: $name (draw $draw)")
         val t0 = System.nanoTime()
-        val ok = try { runQuery(fn(spark, sfDir)); true } catch { case _: Throwable => false }
+        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
         val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         spark.sparkContext.setJobDescription(null)
         // Outside the timed region: a driver GC lets ContextCleaner drop
@@ -179,7 +170,7 @@ object Bench {
         .mkString("[", ",", "]")
       val total = results.map { case (_, v) => if (v < 0) FailPenaltySec else v }.sum
       val json = s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","runs":$runs,""" +
-        s""""sf":"$sfDir","sink":"$sink","queries":$meds,"failed":$failed,"draws":$raw}"""
+        s""""sf":"$sfDir","queries":$meds,"failed":$failed,"draws":$raw}"""
       val p = java.nio.file.Paths.get(rawOut)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, json.getBytes("UTF-8"))

@@ -78,7 +78,8 @@ object GraphQueries {
   /** Shared biconnected labeling for g25/g26 (articulation points are BY
     * DEFINITION derived from the component labeling, so the two gate
     * queries legitimately consume one artifact). Memoized per
-    * (session, data dir) and cache()d, like the TpchGraph frames.
+    * (session, data dir) but not cache()d: the labeling's loop frames are
+    * already cut, so every later use re-reads their stored partitions.
     */
   private val bicompMemo =
     graft.Memo.artifact[(SparkSession, String), DataFrame]()

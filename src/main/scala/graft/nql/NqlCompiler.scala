@@ -4,6 +4,7 @@ import graft.Tables
 import graft.functions.VectorFunctions._
 import graft.graph.{Algorithms, GraphXAdapters, TpchGraph}
 import graft.graph.Superstep.{cut, Fixpoint, Rounds, UpTo}
+import graft.vector.AnnIndex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -233,16 +234,8 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
         "SIMILAR USING INDEX requires a 'vec:*' key")
       val idx = NqlCompiler.ivfIndexes.getOrElse((spark, sfDir),
         throw NqlParseException("no ANN index built — run EMBED BUILD INDEX IVF first"))
-      val q = embOf(key)
-      val probed = idx.centroids.crossJoin(broadcast(q))
-        .select(col("cell"), cosine_similarity(col("centroid"), col("qv")).as("cs"))
-        .orderBy(desc("cs"), col("cell")).limit(nprobe)
-        .select("cell")
-      idx.assigned.join(broadcast(probed), Seq("cell"))
-        .filter(col("key") =!= key)
-        .crossJoin(broadcast(q))
-        .select(col("key"), round(cosine_similarity(col("embedding"), col("qv")), 4).as("score"))
-        .orderBy(desc("score"), col("key")).limit(limit)
+      val q = emb.filter(col("key") === key).select(col("key").as("qid"), col("embedding").as("qv"))
+      AnnIndex.searchIvf(idx, q, limit, nprobe).select(col("id").as("key"), col("score"))
 
     case Similar(key, metric, limit, connectedTo, where, None, collection) if !isVecKey(key) && store.isDefined =>
       // The entity store's native metric is cosine, and its props are not
@@ -979,29 +972,19 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
       status(name, s"collection_created:dim=$dim")
 
     // Build + register the session ANN index (reference `EMBED BUILD
-    // INDEX`, `neumann_parser/src/ast.rs:703`). Default cells are the
-    // deterministic per-label cells with mean centroids (exactly the v08
-    // construction, so the statement path is oracle-checkable); CLUSTERS k
-    // switches to MLlib KMeans cells (fixed seed — deterministic within a
-    // session, not SQL-expressible, so API/spec-level only).
+    // INDEX`, `neumann_parser/src/ast.rs:703`), keyed by `key`. Default
+    // cells are the per-label cells (the v08 index, so the statement path
+    // is oracle-checkable); CLUSTERS k switches to MLlib KMeans cells
+    // (fixed seed — deterministic within a session, not SQL-expressible,
+    // so API/spec-level only), whose cell ids this statement stores as
+    // strings.
     case EmbedBuildIndex(clusters) =>
       val built = clusters match {
         case Some(k) =>
-          val idx = graft.vector.AnnIndex.buildIvf(Tables(spark, sfDir, "embeddings"), k)
-          NqlCompiler.IvfState(
-            idx.assigned.select(
-              concat(lit("vec:"), col("vec_id").cast("string")).as("key"),
-              col("embedding"), col("cell").cast("string").as("cell")),
-            idx.centroids.select(col("cell").cast("string").as("cell"),
-              col("centroid").cast("array<float>").as("centroid")))
-        case None =>
-          val e = emb
-          val cent = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
-            .groupBy("label", "i").agg(avg("x").as("cx"))
-            .groupBy("label")
-            .agg(expr("transform(array_sort(collect_list(struct(i, cx))), p -> p.cx)").as("centroid"))
-            .select(col("label").as("cell"), col("centroid").cast("array<float>").as("centroid"))
-          NqlCompiler.IvfState(e.select(col("key"), col("embedding"), col("label").as("cell")), cent)
+          val idx = AnnIndex.buildIvf(emb, k, id = "key")
+          AnnIndex.IvfIndex(idx.assigned.withColumn("cell", col("cell").cast("string")),
+            idx.centroids.withColumn("cell", col("cell").cast("string")))
+        case None => AnnIndex.labelIvf(emb, "key")
       }
       NqlCompiler.ivfIndexes.put((spark, sfDir), built)
       built.centroids.agg(count(lit(1)).as("n_cells"))
@@ -1521,11 +1504,6 @@ final class NqlCompiler(spark: SparkSession, sfDir: String,
 }
 
 object NqlCompiler {
-  /** A built IVF index: `assigned(key, embedding, cell)` +
-    * `centroids(cell, centroid)`. At cluster scale `cell` is a partition
-    * column and probing prunes partitions (SURVEY §1.4). */
-  final case class IvfState(assigned: DataFrame, centroids: DataFrame)
-
   /** Session-scoped registries, keyed by (session, data dir): the built
     * ANN index (EMBED BUILD INDEX → SIMILAR ... USING INDEX) and the
     * per-collection vector config (name → dimension, metric). The
@@ -1533,7 +1511,7 @@ object NqlCompiler {
     * 455, 1369-1585`); here they are driver-side metadata only — the
     * data they describe lives in DataFrames/parquet. */
   private[nql] val ivfIndexes =
-    graft.Memo.state[(SparkSession, String), IvfState]()
+    graft.Memo.state[(SparkSession, String), AnnIndex.IvfIndex]()
   private[nql] val collections =
     graft.Memo.state[(SparkSession, String, String), (Int, Metric)]()
   /** Registered graph constraints (CONSTRAINT CREATE … → CHECK), keyed

@@ -24,9 +24,15 @@ import org.apache.spark.sql.expressions.Window
 object VectorQueries {
   private def emb(s: SparkSession, d: String): DataFrame = Tables(s, d, "embeddings")
 
-  /** The query vector(s) as a 1-row broadcastable frame. */
+  /** Query vector `id` as a 1-row broadcastable frame (qid, qv). */
   private def qv(s: SparkSession, d: String, id: Long): DataFrame =
-    emb(s, d).filter(col("vec_id") === id).select(col("embedding").as("qv"))
+    emb(s, d).filter(col("vec_id") === id).select(col("vec_id").as("qid"), col("embedding").as("qv"))
+
+  /** Exact top-10 for vec 0 inside its `nprobe` nearest label cells, as
+    * (vec_id, label, score). */
+  private def labelSearch(s: SparkSession, d: String, nprobe: Int): DataFrame =
+    AnnIndex.searchIvf(AnnIndex.labelIvf(emb(s, d)), qv(s, d, 0), 10, nprobe)
+      .select(col("id").as("vec_id"), col("cell").as("label"), col("score"))
 
   /** 16 deterministic ±1 hyperplanes over the 64-d embeddings (signs from
     * a Knuth-multiplicative parity, same constants inlined into the
@@ -211,25 +217,7 @@ object VectorQueries {
     // (Reference IVF: `vector_engine/src/lib.rs:2647-2860`; k-means cells
     // there, pre-assigned cells here so the oracle stays deterministic.)
     "v08_ivf_pruned_search" -> QDef(
-      (s, d) => {
-        val e = emb(s, d)
-        val cent = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
-          .groupBy("label", "i").agg(avg("x").as("cx"))
-          .groupBy("label")
-          .agg(expr("transform(array_sort(collect_list(struct(i, cx))), p -> p.cx)").as("centroid"))
-        val q = qv(s, d, 0)
-        val best = cent.crossJoin(broadcast(q))
-          .select(col("label"),
-            cosine_similarity(col("centroid").cast("array<float>"), col("qv")).as("cs"))
-          .orderBy(desc("cs"), col("label")).limit(1)
-          .select(col("label").as("best_label"))
-        e.join(broadcast(best), col("label") === col("best_label"))
-          .filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(q))
-          .select(col("vec_id"), col("label"),
-            round(cosine_similarity(col("embedding"), col("qv")), 4).as("score"))
-          .orderBy(desc("score"), col("vec_id")).limit(10)
-      },
+      (s, d) => labelSearch(s, d, 1),
       """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
         |flat AS (SELECT label, generate_subscripts(embedding, 1) AS i, unnest(embedding) AS x FROM embeddings),
         |cent AS (SELECT label, list(cx ORDER BY i) AS centroid
@@ -247,25 +235,7 @@ object VectorQueries {
     // union — the standard recall knob (one more probe ≈ one fewer
     // recall miss) at 3× the in-cell scan cost, still never a full scan.
     "v10_ivf_multiprobe" -> QDef(
-      (s, d) => {
-        val e = emb(s, d)
-        val cent = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
-          .groupBy("label", "i").agg(avg("x").as("cx"))
-          .groupBy("label")
-          .agg(expr("transform(array_sort(collect_list(struct(i, cx))), p -> p.cx)").as("centroid"))
-        val q = qv(s, d, 0)
-        val probed = cent.crossJoin(broadcast(q))
-          .select(col("label"),
-            cosine_similarity(col("centroid").cast("array<float>"), col("qv")).as("cs"))
-          .orderBy(desc("cs"), col("label")).limit(3)
-          .select(col("label").as("probe_label"))
-        e.join(broadcast(probed), col("label") === col("probe_label"))
-          .filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(q))
-          .select(col("vec_id"), col("label"),
-            round(cosine_similarity(col("embedding"), col("qv")), 4).as("score"))
-          .orderBy(desc("score"), col("vec_id")).limit(10)
-      },
+      (s, d) => labelSearch(s, d, 3),
       """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
         |flat AS (SELECT label, generate_subscripts(embedding, 1) AS i, unnest(embedding) AS x FROM embeddings),
         |cent AS (SELECT label, list(cx ORDER BY i) AS centroid
@@ -331,26 +301,17 @@ object VectorQueries {
     // vec_id tiebreak (file convention) so ranks are engine-stable.
     "v12_knn_join_ivf" -> QDef(
       (s, d) => {
-        val e = emb(s, d)
-        val cent = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
-          .groupBy("label", "i").agg(avg("x").as("cx"))
-          .groupBy("label")
-          .agg(expr("transform(array_sort(collect_list(struct(i, cx))), p -> p.cx)").as("centroid"))
-        val q = e.filter(col("vec_id") % 37 === 0)
+        val index = AnnIndex.labelIvf(emb(s, d))
+        val q = emb(s, d).filter(col("vec_id") % 37 === 0)
           .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        val wAssign = Window.partitionBy("qid").orderBy(desc("cs"), col("label"))
-        val assigned = q.crossJoin(broadcast(cent))
-          .withColumn("cs", cosine_similarity(col("centroid").cast("array<float>"), col("qv")))
-          .withColumn("rn", row_number().over(wAssign))
-          .filter(col("rn") === 1)
-          .select("qid", "qv", "label")
-        val wRank = Window.partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-        e.join(broadcast(assigned), Seq("label"))
-          .filter(col("vec_id") =!= col("qid"))
+        val assigned = AnnIndex.probe(index.centroids, q, 1).select("qid", "qv", "cell")
+        val wRank = Window.partitionBy("qid").orderBy(desc("score"), col("id"))
+        index.assigned.join(broadcast(assigned), Seq("cell"))
+          .filter(col("id") =!= col("qid"))
           .withColumn("score", round(cosine_similarity(col("embedding"), col("qv")), 4))
           .withColumn("rnk", row_number().over(wRank).cast("long"))
           .filter(col("rnk") <= 3)
-          .select(col("qid"), col("vec_id").as("nbr_id"), col("rnk"), col("score"))
+          .select(col("qid"), col("id").as("nbr_id"), col("rnk"), col("score"))
           .orderBy("qid", "rnk")
       },
       """WITH flat AS (SELECT label, generate_subscripts(embedding, 1) AS i, unnest(embedding) AS x FROM embeddings),
@@ -380,17 +341,12 @@ object VectorQueries {
     // sized, broadcast territory at any corpus scale.
     "v13_centroid_separation" -> QDef(
       (s, d) => {
-        val cent = emb(s, d)
-          .select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
-          .groupBy("label", "i").agg(avg("x").as("cx"))
-          .groupBy("label")
-          .agg(expr("transform(array_sort(collect_list(struct(i, cx))), p -> p.cx)").as("centroid"))
-        val a = cent.select(col("label").as("la"), col("centroid").as("ca"))
-        val b = cent.select(col("label").as("lb"), col("centroid").as("cb"))
+        val cent = AnnIndex.labelIvf(emb(s, d)).centroids
+        val a = cent.select(col("cell").as("la"), col("centroid").as("ca"))
+        val b = cent.select(col("cell").as("lb"), col("centroid").as("cb"))
         a.join(b, col("la") < col("lb"))
           .select(col("la"), col("lb"),
-            round(cosine_similarity(col("ca").cast("array<float>"),
-              col("cb").cast("array<float>")), 4).as("score"))
+            round(cosine_similarity(col("ca"), col("cb")), 4).as("score"))
           .orderBy("la", "lb")
       },
       """WITH flat AS (SELECT label, generate_subscripts(embedding, 1) AS i, unnest(embedding) AS x FROM embeddings),
@@ -524,27 +480,14 @@ object VectorQueries {
     // against sampled ground truth. Monotone in nprobe by construction.
     "v22_ivf_recall_curve" -> QDef(
       (s, d) => {
-        val e = emb(s, d)
+        val index = AnnIndex.labelIvf(emb(s, d))
         val q = qv(s, d, 0)
-        val scored = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
-          .select(col("vec_id"), col("label"),
-            round(cosine_similarity(col("embedding"), col("qv")), 4).as("score"))
-        val exact = scored.orderBy(desc("score"), col("vec_id")).limit(10)
-          .select("vec_id")
-        val cent = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
-          .groupBy("label", "i").agg(avg("x").as("cx"))
-          .groupBy("label")
-          .agg(expr("transform(array_sort(collect_list(struct(i, cx))), p -> p.cx)").as("centroid"))
-        val ranked = cent.crossJoin(broadcast(q))
-          .select(col("label"),
-            cosine_similarity(col("centroid").cast("array<float>"), col("qv")).as("cs"))
-          .withColumn("rn", row_number().over(Window.orderBy(desc("cs"), col("label"))))
+        val exact = index.assigned.filter(col("id") =!= 0).crossJoin(broadcast(q))
+          .select(col("id"), round(cosine_similarity(col("embedding"), col("qv")), 4).as("score"))
+          .orderBy(desc("score"), col("id")).limit(10)
+          .select("id")
         val branches = (1 to 3).map { np =>
-          val probed = ranked.filter(col("rn") <= np).select("label")
-          val approx = scored.join(broadcast(probed), Seq("label"))
-            .orderBy(desc("score"), col("vec_id")).limit(10)
-            .select("vec_id")
-          approx.join(exact, Seq("vec_id"))
+          AnnIndex.searchIvf(index, q, 10, np).select("id").join(exact, Seq("id"))
             .agg((count(lit(1)).cast("double") / 10).as("recall_at_10"))
             .select(lit(np).as("n_probe"), col("recall_at_10"))
         }
@@ -590,14 +533,8 @@ object VectorQueries {
           posexplode(col("v")).as(Seq("i", "x")))
         val cent = flat.groupBy(col("label").as("cl"), col("i"))
           .agg(round(avg("x"), 6).as("cx"))
-        val cellCent = cent.groupBy(col("cl"))
-          .agg(expr("transform(array_sort(collect_list(struct(i, cx))), p -> p.cx)").as("centroid"))
-        val q = qv(s, d, 0)
-        val probed = cellCent.crossJoin(broadcast(q))
-          .select(col("cl"),
-            cosine_similarity(col("centroid").cast("array<float>"), col("qv")).as("cs"))
-          .orderBy(desc("cs"), col("cl")).limit(2)
-          .select(col("cl").as("probe_cl"))
+        val cellCent = AnnIndex.centroidArrays(cent.select(col("cl").as("cell"), col("i"), col("cx")))
+        val probed = AnnIndex.probe(cellCent, qv(s, d, 0).coalesce(1), 2).select(col("cell").as("probe_cl"))
         val dists = flat.drop("label")
           .join(broadcast(cent), Seq("i"))
           .groupBy(col("vec_id"), col("cl"), expr("CAST(i DIV 16 AS INT)").as("m"))

@@ -19,13 +19,13 @@ class AnnIndexSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
 
     val index = AnnIndex.buildIvf(emb.filter(col("vec_id") =!= 0), k = 8)
-    val approx = AnnIndex.searchIvf(index, query, k = 10, nprobe = 3)
+    val approx = AnnIndex.searchIvf(index, 0L, query, k = 10, nprobe = 3)
       .collect().map(_.getLong(0)).toSet
 
     val recall = (exact intersect approx).size.toDouble / exact.size
     assert(recall >= 0.5, s"IVF recall too low: $recall (exact=$exact approx=$approx)")
     // full probe = exact: nprobe = k cells must reproduce brute force
-    val full = AnnIndex.searchIvf(index, query, k = 10, nprobe = 8)
+    val full = AnnIndex.searchIvf(index, 0L, query, k = 10, nprobe = 8)
       .collect().map(_.getLong(0)).toSet
     assert(full == exact, s"nprobe=k should be exact: $full vs $exact")
   }
@@ -45,10 +45,10 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(queries.length == 20)
 
     def recallAt(nprobe: Int): Double = {
-      val per = queries.map { case (_, q) =>
-        val approx = AnnIndex.searchIvf(index, q, k = 10, nprobe = nprobe)
+      val per = queries.map { case (id, q) =>
+        val approx = AnnIndex.searchIvf(index, id, q, k = 10, nprobe = nprobe)
           .collect().map(_.getLong(0)).toSet
-        val exact = AnnIndex.searchIvf(index, q, k = 10, nprobe = 8)
+        val exact = AnnIndex.searchIvf(index, id, q, k = 10, nprobe = 8)
           .collect().map(_.getLong(0)).toSet
         (exact intersect approx).size.toDouble / exact.size
       }

@@ -37,12 +37,12 @@ class AnnRecallSf1Spec extends AnyFunSuite {
 
     // exact baseline once per query: nprobe = k probes every cell
     val exactSets = queries.map { case (id, q) =>
-      id -> AnnIndex.searchIvf(index, q, k = 10, nprobe = 8)
+      id -> AnnIndex.searchIvf(index, id, q, k = 10, nprobe = 8)
         .collect().map(_.getLong(0)).toSet
     }.toMap
     def recallAt(nprobe: Int): Double = {
       val per = queries.map { case (id, q) =>
-        val approx = AnnIndex.searchIvf(index, q, k = 10, nprobe = nprobe)
+        val approx = AnnIndex.searchIvf(index, id, q, k = 10, nprobe = nprobe)
           .collect().map(_.getLong(0)).toSet
         (exactSets(id) intersect approx).size.toDouble / exactSets(id).size
       }

@@ -38,7 +38,7 @@ object StoreDemo {
     idx.assigned.groupBy("cell").count().orderBy("cell").show()
     val q = emb.filter(col("vec_id") === 0).select("embedding").collect()(0).getSeq[Float](0).toArray
     println("IVF top-5 (nprobe=3) for vec 0:")
-    AnnIndex.searchIvf(idx, q, 5, 3).show()
+    AnnIndex.searchIvf(idx, 0L, q, 5, 3).show()
     spark.stop()
   }
 }
